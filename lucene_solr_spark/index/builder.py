@@ -152,7 +152,6 @@ def build_index(
     passthrough_cols: tuple[str, ...] = (),
     persist: bool = True,
     build_positions: bool = False,
-    persist_positions: bool = True,
     term_map=None,
     multivalued: bool = False,
     position_increment_gap: int = 100,
@@ -384,8 +383,7 @@ def build_index(
     # optional positions index (DOCS_AND_FREQS_AND_POSITIONS, FieldInfo.java:56-84)
     # — the per-occurrence view the phrase/span query kernels consume, derived
     # lazily from the cached grouped frame (no tokenizer re-run, never
-    # separately cached; ``persist_positions`` is retained for API
-    # compatibility but the grouped frame is the single cache now)
+    # separately cached: the grouped frame is the single cache)
     positions = None
     if build_positions:
         positions = positions_grouped.select(

@@ -7,6 +7,9 @@ supported subset covers the web-query shapes of the fixture set
 (EnwikiQueryMaker-style): terms, "quoted phrases" (with ~slop suffix),
 +required / -prohibited prefixes, AND/OR connectives, term^boost, wildcard
 (* ?), prefix (trailing *), fuzzy (term~N), [a TO b] term ranges.
+Outside that subset the parser refuses rather than guesses: ``( )``
+grouping outside a quoted phrase and backslash escapes raise QuerySyntaxError,
+because flattening them would silently change which documents match.
 
 Semantics match the engine's executor:
 - bare terms are SHOULD clauses; with any explicit AND the bare terms become
@@ -64,6 +67,23 @@ _BOOST_RE = re.compile(r"\^(\d+(?:\.\d+)?)$")
 _FUZZY_RE = re.compile(r"~(\d?)$")
 # field:term production (QueryParserBase.java:486-858 — any name:rest pair)
 _FIELD_RE = re.compile(r"^([A-Za-z_][A-Za-z0-9_]*):(.+)$")
+# a quoted phrase (skipped: its parens are just text to analyze) or a
+# grouping paren outside one
+_GROUPING_RE = re.compile(r'"[^"]*"|[()]')
+
+
+class QuerySyntaxError(ValueError):
+    """The query uses classic-grammar syntax this parser does not implement."""
+
+
+def _reject_unsupported(q: str) -> None:
+    if "\\" in q:
+        raise QuerySyntaxError(f"backslash escapes are not supported: {q!r}")
+    for m in _GROUPING_RE.finditer(q):
+        if m.group(0) in ("(", ")"):
+            raise QuerySyntaxError(
+                f"parenthesized grouping is not supported: {q!r}"
+            )
 
 
 def parse_query(q: str, default_op: str = "OR"):
@@ -71,7 +91,9 @@ def parse_query(q: str, default_op: str = "OR"):
 
     Returns a BooleanQuery (possibly with zero clauses if everything was a
     stopword), or a single multi-term/range query when the string is exactly
-    one such clause."""
+    one such clause.  Raises QuerySyntaxError (a ValueError) on grouping
+    parentheses and backslash escapes."""
+    _reject_unsupported(q)
     must: list = []
     should: list = []
     must_not: list = []

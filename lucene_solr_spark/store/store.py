@@ -25,6 +25,7 @@ whatever batch cadence bounds recovery time.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -32,16 +33,26 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from lucene_solr_spark.index.builder import IndexTables, build_index
+from lucene_solr_spark.index.codec import vb_decode
 from lucene_solr_spark.index.compress import (
     build_compressed_segments,
     compress_positions,
 )
+from lucene_solr_spark.smallfloat import NORM_TABLE
 
 
 class SimulatedFailure(RuntimeError):
@@ -197,7 +208,6 @@ def build_pages_to_store(
             passthrough_cols=("lang",),
             persist=True,
             build_positions=build_positions,
-            persist_positions=False,  # compressed exactly once below
         )
         # The three layer writes are independent jobs over already-materialized
         # caches (build_index's stats agg forced docs + the grouped frame), so
@@ -290,71 +300,137 @@ def build_pages_to_store(
     return snap
 
 
+def _binary_parts(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(bytes, row offsets) of a batch's Binary array, or LargeBinary when
+    ``spark.sql.execution.arrow.useLargeVarTypes`` is on.  Honours the
+    array's slice offset: ``bytes[offs[i]:offs[i+1]]`` is row i's blob and
+    ``offs[0] == 0``."""
+    odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    _, obuf, dbuf = arr.buffers()
+    offs = np.frombuffer(obuf, dtype=odt)[arr.offset : arr.offset + len(arr) + 1]
+    offs = offs.astype(np.int64)
+    return np.frombuffer(dbuf, dtype=np.uint8)[offs[0] : offs[-1]], offs - offs[0]
+
+
+def _vb_decode_rows(arr) -> tuple[np.ndarray, np.ndarray]:
+    """Varbyte-decode every row of a binary array in ONE pass over its
+    concatenated buffer: (values uint64, per-row value offsets).  Each row's
+    blob ends on a terminator byte (high bit clear), so no value straddles
+    two rows and the per-row counts are terminator counts."""
+    data, offs = _binary_parts(arr)
+    ends = np.zeros(data.size + 1, dtype=np.int64)
+    np.cumsum((data & 0x80) == 0, out=ends[1:])
+    return vb_decode(data), ends[offs]
+
+
+def _segmented_cumsum(values: np.ndarray, offs: np.ndarray) -> np.ndarray:
+    """int64 prefix sums of ``values`` restarting at each ``offs`` boundary."""
+    cs = np.cumsum(values.astype(np.int64))
+    base = np.concatenate(([0], cs))[offs[:-1]]
+    return cs - np.repeat(base, np.diff(offs))
+
+
+def _decode_postings_arrow(gaps, tfs, norms):
+    """Batch decode of compressed posting rows -> list<struct<docid, tf,
+    dl_approx>> per row (the inverse of codec.encode_postings)."""
+    g, offs = _vb_decode_rows(gaps)
+    docids = _segmented_cumsum(g, offs)
+    t, _ = _vb_decode_rows(tfs)
+    nb, _ = _binary_parts(norms)
+    items = pa.StructArray.from_arrays(
+        [
+            pa.array(docids, pa.int64()),
+            pa.array(t.astype(np.int32), pa.int32()),
+            pa.array(NORM_TABLE[nb].astype(np.float64), pa.float64()),
+        ],
+        names=["docid", "tf", "dl_approx"],
+    )
+    return pa.ListArray.from_arrays(pa.array(offs.astype(np.int32)), items)
+
+
+def _decode_positions_arrow(gaps, counts, deltas, norms):
+    """Batch decode of compressed position rows -> list<struct<docid, pos,
+    dl_approx>> per row, one element per occurrence (the inverse of
+    codec.encode_positions)."""
+    g, doc_offs = _vb_decode_rows(gaps)
+    docids = _segmented_cumsum(g, doc_offs)
+    c, _ = _vb_decode_rows(counts)
+    c = c.astype(np.int64)
+    occ_offs = np.zeros(c.size + 1, dtype=np.int64)
+    np.cumsum(c, out=occ_offs[1:])
+    d, _ = _vb_decode_rows(deltas)
+    # every row starts on a doc, so doc boundaries include row boundaries
+    pos = _segmented_cumsum(d, occ_offs)
+    nb, _ = _binary_parts(norms)
+    items = pa.StructArray.from_arrays(
+        [
+            pa.array(np.repeat(docids, c), pa.int64()),
+            pa.array(pos.astype(np.int32), pa.int32()),
+            pa.array(NORM_TABLE[np.repeat(nb, c)].astype(np.float64), pa.float64()),
+        ],
+        names=["docid", "pos", "dl_approx"],
+    )
+    return pa.ListArray.from_arrays(
+        pa.array(occ_offs[doc_offs].astype(np.int32)), items
+    )
+
+
+def _decoded_type(value_field: str) -> ArrayType:
+    return ArrayType(
+        StructType(
+            [
+                StructField("docid", LongType()),
+                StructField(value_field, IntegerType()),
+                StructField("dl_approx", DoubleType()),
+            ]
+        )
+    )
+
+
+# Built on first use, once per driver: executors import this module without
+# a SparkContext, and re-wrapping per load_index would redo UDF setup on
+# every open.
+@functools.cache
+def _postings_udf():
+    return F.arrow_udf(_decode_postings_arrow, _decoded_type("tf"))
+
+
+@functools.cache
+def _positions_udf():
+    return F.arrow_udf(_decode_positions_arrow, _decoded_type("pos"))
+
+
 def postings_from_compressed(compressed: DataFrame) -> DataFrame:
     """Decode the compressed segment rows back to exploded postings
     (index_partition, term, docid, tf, dl_approx) — the Catalyst scoring /
-    facet source.  Arrow-batched decode, no per-row Python."""
-    from lucene_solr_spark.index.codec import vb_decode
-    from lucene_solr_spark.smallfloat import NORM_TABLE
+    facet source.
 
-    def decode(batches):
-        for pdf in batches:
-            out = []
-            for _, r in pdf.iterrows():
-                gaps = vb_decode(bytes(r["doc_gaps_vb"])).astype(np.int64)
-                docids = np.cumsum(gaps)
-                tfs = vb_decode(bytes(r["tfs_vb"])).astype(np.int32)
-                norms = np.frombuffer(bytes(r["norm_bytes"]), dtype=np.uint8)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "index_partition": np.int32(r["index_partition"]),
-                            "term": r["term"],
-                            "docid": docids,
-                            "tf": tfs,
-                            "dl_approx": NORM_TABLE[norms].astype(np.float64),
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    return compressed.mapInPandas(
-        decode,
-        "index_partition int, term string, docid long, tf int, dl_approx double",
+    One scalar Arrow UDF call per batch decodes all of the batch's blobs
+    (no per-row Python) and ``inline`` explodes the result.  ``term`` and
+    ``index_partition`` pass through the Generate unchanged, so a filter on
+    them above this view is pushed down to the segments scan: a term query
+    decodes only its own terms' rows."""
+    return compressed.select(
+        F.col("index_partition").cast("int").alias("index_partition"),
+        "term",
+        F.inline(_postings_udf()("doc_gaps_vb", "tfs_vb", "norm_bytes")),
     )
 
 
 def positions_from_compressed(compressed: DataFrame) -> DataFrame:
     """Decode compressed position rows back to the exploded positions view
     (index_partition, term, docid, pos, dl_approx) — the phrase / sloppy /
-    span query source.  Arrow-batched decode, no per-row Python loops beyond
-    the per-term blob walk."""
-    from lucene_solr_spark.index.codec import decode_positions
-    from lucene_solr_spark.smallfloat import NORM_TABLE
-
-    def decode(batches):
-        for pdf in batches:
-            out = []
-            for _, r in pdf.iterrows():
-                docids, poss, norms = decode_positions(r)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "index_partition": np.int32(r["index_partition"]),
-                            "term": r["term"],
-                            "docid": docids,
-                            "pos": poss.astype(np.int32),
-                            "dl_approx": NORM_TABLE[norms].astype(np.float64),
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    return compressed.mapInPandas(
-        decode,
-        "index_partition int, term string, docid long, pos int, dl_approx double",
+    span query source.  Same shape as postings_from_compressed: one Arrow
+    UDF call per batch, ``inline``, and ``term`` filters pushed down to the
+    positions scan."""
+    return compressed.select(
+        F.col("index_partition").cast("int").alias("index_partition"),
+        "term",
+        F.inline(
+            _positions_udf()(
+                "doc_gaps_vb", "pos_counts_vb", "positions_vb", "norm_bytes"
+            )
+        ),
     )
 
 
@@ -547,8 +623,12 @@ def load_index(
     """Open the store at its current snapshot as queryable IndexTables.
 
     Collection stats come from the snapshot manifest (exact, build-order
-    independent); postings are a lazy decoded view over the compressed
-    segments, so the store holds exactly one copy of the posting data.
+    independent); postings and positions are lazy decoded views over the
+    compressed rows, so the store holds exactly one copy of the posting
+    data.  The views are term-pruned at the scan: a ``term`` filter on
+    ``postings`` / ``positions`` (including one above the deletes anti-join)
+    is pushed down to the Parquet read, so a query decodes only the rows of
+    its own terms.
 
     Deletes: committed delete generations are applied as an anti-join on
     docs/postings; stats stay at their pre-delete values until compaction

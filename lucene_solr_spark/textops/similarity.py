@@ -772,7 +772,7 @@ def pq_topk_refined(
     exclude_id: int | None = None,
 ) -> DataFrame:
     """The standard PQ + refine pipeline (FAISS IndexRefineFlat shape):
-    ADC over the codes produces ``n_candidates`` (default 5k) cheap
+    ADC over the codes produces ``n_candidates`` (default ``5 * k``) cheap
     candidates, then the exact cosine re-ranks ONLY those — the float
     vectors are touched for a bounded candidate set, never the corpus.
     At 10^12 embeddings the codes column is the resident index; the

@@ -4,7 +4,11 @@ from __future__ import annotations
 
 import pytest
 
-from lucene_solr_spark.search.parser import CompositeQuery, parse_query
+from lucene_solr_spark.search.parser import (
+    CompositeQuery,
+    QuerySyntaxError,
+    parse_query,
+)
 from lucene_solr_spark.search.query import (
     BooleanQuery,
     FuzzyQuery,
@@ -263,6 +267,29 @@ def test_signed_phrase_and_range_buckets():
 
     q = parse_query('-title:"alpha beta" table')
     assert q.not_specials == (PhraseQuery(("alpha", "beta"), field="title"),)
+
+
+@pytest.mark.parametrize(
+    "q",
+    [
+        "(table OR merge) AND scan",  # flattened to +table +merge +scan
+        "title:(table merge)",  # scoped only `table` to title
+        "foo\\:bar",  # split into two terms
+        "table (merge)",
+        "scan)",
+        "table\\ merge",
+    ],
+)
+def test_unsupported_syntax_raises(q):
+    """Grouping and escapes are outside the supported grammar subset: the
+    parser refuses them instead of returning a different query."""
+    with pytest.raises(QuerySyntaxError):
+        parse_query(q)
+    assert issubclass(QuerySyntaxError, ValueError)
+
+
+def test_parens_inside_phrase_are_text():
+    assert parse_query('"table (scan)"') == PhraseQuery(("table", "scan"))
 
 
 def test_search_parsed_must_not_only_is_match_no_docs(index):

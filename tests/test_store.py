@@ -2,8 +2,22 @@
 
 from __future__ import annotations
 
+import re
+
+import numpy as np
+import pyarrow as pa
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
+
+from lucene_solr_spark.index.codec import (
+    decode_positions,
+    decode_postings,
+    encode_positions,
+    encode_postings,
+)
+from lucene_solr_spark.smallfloat import NORM_TABLE
 
 
 @pytest.fixture(scope="module")
@@ -241,3 +255,227 @@ def test_multifield_store_rerun_is_noop(spark, sf_dir, tmp_path):
         assert json.load(f)["default_field"] == "body"
     loaded = load_multifield_index(spark, root)
     assert search_parsed_fields(loaded, "scan title:merge", k=5).count() > 0
+
+
+# ---------------------------------------------------------------------------
+# batch decoders vs the per-row codec
+# ---------------------------------------------------------------------------
+
+# doc gaps straddling every varbyte length boundary: 1, 2, 3 and 4 bytes
+_GAPS = st.one_of(
+    st.integers(1, 3),
+    st.integers(2**7, 2**7 + 3),
+    st.integers(2**14, 2**14 + 3),
+    st.integers(2**21, 2**22),
+)
+_BLOB_TYPES = st.sampled_from([pa.binary(), pa.large_binary()])
+
+
+@st.composite
+def _posting_rows(draw):
+    """Encoded posting rows (some single-posting, tfs past one varbyte)."""
+    rows = []
+    for _ in range(draw(st.integers(1, 6))):
+        n = draw(st.integers(1, 40))
+        first = draw(st.integers(0, 2**21))
+        gaps = draw(st.lists(_GAPS, min_size=n - 1, max_size=n - 1))
+        docids = np.cumsum(np.array([first, *gaps], dtype=np.int64))
+        tfs = np.array(
+            draw(st.lists(st.integers(1, 300), min_size=n, max_size=n)), np.int64
+        )
+        norms = np.array(
+            draw(st.lists(st.integers(0, 255), min_size=n, max_size=n)), np.uint8
+        )
+        rows.append(encode_postings(docids, tfs, norms))
+    return rows
+
+
+@st.composite
+def _position_rows(draw):
+    """Encoded position rows (some docs with one position, empty rows)."""
+    rows = []
+    for _ in range(draw(st.integers(1, 6))):
+        ndocs = draw(st.integers(0, 12))
+        docs = np.cumsum(
+            np.array(draw(st.lists(_GAPS, min_size=ndocs, max_size=ndocs)), np.int64)
+        )
+        d, p, nb = [], [], []
+        for doc in docs:
+            npos = draw(st.integers(1, 4))
+            deltas = draw(st.lists(_GAPS, min_size=npos, max_size=npos))
+            d += [doc] * npos
+            p += np.cumsum(deltas).tolist()
+            nb += [draw(st.integers(0, 255))] * npos
+        rows.append(
+            encode_positions(
+                np.array(d, np.int64), np.array(p, np.int64), np.array(nb, np.uint8)
+            )
+        )
+    return rows
+
+
+def _sliced(rows, cols, blob_type, lo, hi):
+    """Each blob column as an Arrow array over ALL rows, sliced to
+    [lo, hi) — so its offsets start at a non-zero buffer position."""
+    return [pa.array([r[c] for r in rows], blob_type)[lo:hi] for c in cols]
+
+
+def _check_postings(rows, blob_type, lo, hi):
+    from lucene_solr_spark.store.store import _decode_postings_arrow
+
+    out = _decode_postings_arrow(
+        *_sliced(rows, ("doc_gaps_vb", "tfs_vb", "norm_bytes"), blob_type, lo, hi)
+    )
+    assert len(out) == hi - lo
+    for got, row in zip(out.to_pylist(), rows[lo:hi]):
+        docids, tfs, norms = decode_postings(row)
+        assert [x["docid"] for x in got] == docids.tolist()
+        assert [x["tf"] for x in got] == tfs.tolist()
+        assert [x["dl_approx"] for x in got] == NORM_TABLE[norms].tolist()
+
+
+def _check_positions(rows, blob_type, lo, hi):
+    from lucene_solr_spark.store.store import _decode_positions_arrow
+
+    cols = ("doc_gaps_vb", "pos_counts_vb", "positions_vb", "norm_bytes")
+    out = _decode_positions_arrow(*_sliced(rows, cols, blob_type, lo, hi))
+    assert len(out) == hi - lo
+    for got, row in zip(out.to_pylist(), rows[lo:hi]):
+        docids, poss, norms = decode_positions(row)
+        assert [x["docid"] for x in got] == docids.tolist()
+        assert [x["pos"] for x in got] == poss.tolist()
+        assert [x["dl_approx"] for x in got] == NORM_TABLE[norms].tolist()
+
+
+@given(_posting_rows(), _BLOB_TYPES, st.data())
+@settings(max_examples=150, deadline=None)
+def test_batch_postings_decode_equals_per_row_codec(rows, blob_type, data):
+    lo = data.draw(st.integers(0, len(rows) - 1))
+    hi = data.draw(st.integers(lo + 1, len(rows)))
+    _check_postings(rows, blob_type, lo, hi)
+
+
+@given(_position_rows(), _BLOB_TYPES, st.data())
+@settings(max_examples=150, deadline=None)
+def test_batch_positions_decode_equals_per_row_codec(rows, blob_type, data):
+    lo = data.draw(st.integers(0, len(rows) - 1))
+    hi = data.draw(st.integers(lo + 1, len(rows)))
+    _check_positions(rows, blob_type, lo, hi)
+
+
+def test_batch_decode_edge_shapes():
+    """Pinned shapes: a one-row batch sliced out of the middle, a
+    single-posting term, a doc with one position, an empty positions row."""
+    one = np.array([2**21 + 5], np.int64)
+    post = [
+        encode_postings(np.array([0, 1, 2**7 + 1]), np.array([1, 128, 2]),
+                        np.array([0, 9, 255], np.uint8)),
+        encode_postings(one, np.array([300]), np.array([7], np.uint8)),
+        encode_postings(np.array([3, 2**14 + 3]), np.array([1, 1]),
+                        np.array([1, 2], np.uint8)),
+    ]
+    for blob_type in (pa.binary(), pa.large_binary()):
+        _check_postings(post, blob_type, 1, 2)
+        _check_postings(post, blob_type, 0, 3)
+    e = np.empty(0, np.int64)
+    pos = [
+        encode_positions(np.array([4, 4, 9]), np.array([0, 2**14, 3]),
+                         np.array([5, 5, 6], np.uint8)),
+        encode_positions(one, np.array([2**7]), np.array([3], np.uint8)),
+        encode_positions(e, e, np.empty(0, np.uint8)),
+    ]
+    for blob_type in (pa.binary(), pa.large_binary()):
+        _check_positions(pos, blob_type, 1, 2)
+        _check_positions(pos, blob_type, 0, 3)
+
+
+# ---------------------------------------------------------------------------
+# term pruning on reopened stores
+# ---------------------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def reopened(spark, pages, tmp_path_factory):
+    """The three ways a store is reopened: a batch store, the same store
+    after delete_by_term, and a two-generation streaming store."""
+    import shutil
+
+    from lucene_solr_spark.store import build_pages_to_store, delete_by_term, load_index
+    from lucene_solr_spark.streaming import StreamingIndexer, load_streaming_index
+
+    base = tmp_path_factory.mktemp("pruned")
+    batch, deleted, stream = (str(base / n) for n in ("batch", "deleted", "stream"))
+    build_pages_to_store(spark, pages, batch, num_index_partitions=4)
+    shutil.copytree(batch, deleted)
+    delete_by_term(spark, deleted, "merge")
+    indexer = StreamingIndexer(spark, stream, num_index_partitions=4)
+    doc_id = F.split(F.col("url"), "/doc/")[1].cast("long")
+    indexer.process_batch(pages.where(doc_id % 2 == 0), 0)
+    indexer.process_batch(pages.where(doc_id % 2 == 1), 1)
+    return {
+        "batch": load_index(spark, batch),
+        "deleted": load_index(spark, deleted),
+        "streaming": load_streaming_index(spark, stream),
+    }
+
+
+def _segment_scan_filters(df) -> list[str]:
+    """PushedFilters of every scan over compressed rows in df's plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan
+    return [
+        re.search(r"PushedFilters: \[(.*?)\], ReadSchema", line).group(1)
+        for line in plan.splitlines()
+        if "FileScan parquet" in line and "doc_gaps_vb" in line
+    ]
+
+
+def _decoded_rows(spark, df) -> int:
+    """Rows emitted by the decode (Generate) nodes while collecting df."""
+    status = spark._jsparkSession.sharedState().statusStore()
+
+    def last_id() -> int:
+        # the store keeps only the most recent executions, in id order, so
+        # new ones are found by id rather than by list position
+        n = status.executionsCount()
+        return status.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+    before = last_id()
+    df.collect()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    total = 0
+    for eid in range(before + 1, last_id() + 1):
+        values = status.executionMetrics(eid)
+        nodes = status.planGraph(eid).allNodes()
+        for i in range(nodes.size()):
+            node = nodes.apply(i)
+            if node.name() != "Generate":
+                continue
+            metrics = node.metrics()
+            for j in range(metrics.size()):
+                m = metrics.apply(j)
+                v = values.get(m.accumulatorId())
+                if m.name() == "number of output rows" and v.isDefined():
+                    total += int(v.get().replace(",", ""))
+    return total
+
+
+@pytest.mark.parametrize("kind", ["batch", "deleted", "streaming"])
+def test_reopened_views_decode_only_query_terms(spark, reopened, kind):
+    idx = reopened[kind]
+    terms = ["table", "merge", "scan"]
+    stats = {
+        r.term: (r.df, r.cf)
+        for r in idx.segments.filter(F.col("term").isin(terms)).collect()
+    }
+    assert set(stats) == set(terms)
+
+    postings = idx.postings.filter(F.col("term").isin(terms))
+    scans = _segment_scan_filters(postings)
+    assert scans and all("In(term" in f for f in scans), scans
+    # decoded postings == Σdf of the query terms, not the whole table
+    assert _decoded_rows(spark, postings) == sum(df for df, _ in stats.values())
+
+    positions = idx.positions.filter(F.col("term") == "table")
+    scans = _segment_scan_filters(positions)
+    assert scans and all("EqualTo(term,table)" in f for f in scans), scans
+    assert _decoded_rows(spark, positions) == stats["table"][1]
