@@ -21,14 +21,13 @@ Algorithm notes (matching the Snowball runtime semantics exactly):
   letter to sit at index >= 3 (in_grouping_b consumes one char before
   `hop 3`, so the 'st' must start at index >= 4).
 
-Spark integration is the porter_stem_map shape: a vocabulary-level term
-map (one Arrow batch over |V| distinct terms, broadcast-joined into the
-posting build) — see analysis/stemmer.py.
+Spark integration is snowball_registry.snowball_stem_map — the
+porter_stem_map shape: a vocabulary-level term map (one Arrow batch over |V|
+distinct terms, broadcast-joined into the posting build), see
+analysis/stemmer.py.
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 _VOWELS = frozenset("aeiouyäöü")
 _S_ENDING = frozenset("bdfghklmnrt")
@@ -194,17 +193,3 @@ def german_snowball_stem(word: str, variant: int = 1) -> str:
 
 def german2_snowball_stem(word: str) -> str:
     return german_snowball_stem(word, variant=2)
-
-
-def german_snowball_stem_map(vocab, variant: int = 1):
-    """(term, new_term) dictionary over a distinct-term frame — the
-    porter_stem_map shape (analysis/stemmer.py)."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("string")
-    def _stem(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: german_snowball_stem(t, variant))
-
-    return vocab.select(
-        F.col("term"), _stem(F.col("term")).alias("new_term")
-    ).where(F.col("new_term") != F.col("term"))

@@ -19,12 +19,11 @@ Runtime-semantics notes (matching the generated runtime exactly):
   'u' with NO RV gate; residual 'e/é' deletes a preceding 'u' of 'gu'
   only when that 'u' is itself in RV.
 
-Spark integration is the porter_stem_map shape (analysis/stemmer.py).
+Spark integration is snowball_registry.snowball_stem_map — the
+porter_stem_map shape (analysis/stemmer.py).
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 _VOWELS = frozenset("aeiouáéíóúü")
 
@@ -241,17 +240,3 @@ def spanish_snowball_stem(word: str) -> str:
             w = w[:start]
 
     return w.translate(_DEACCENT)
-
-
-def spanish_snowball_stem_map(vocab):
-    """(term, new_term) dictionary over a distinct-term frame — the
-    porter_stem_map shape (analysis/stemmer.py)."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("string")
-    def _stem(s: pd.Series) -> pd.Series:
-        return s.map(spanish_snowball_stem)
-
-    return vocab.select(
-        F.col("term"), _stem(F.col("term")).alias("new_term")
-    ).where(F.col("new_term") != F.col("term"))

@@ -16,12 +16,11 @@ Runtime-semantics notes:
   'ie'; tidy ends with the undouble-final-consonant scan that skips
   trailing vowels.
 
-Spark integration is the porter_stem_map shape (analysis/stemmer.py).
+Spark integration is snowball_registry.snowball_stem_map — the
+porter_stem_map shape (analysis/stemmer.py).
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 _V1 = frozenset("aeiouyäö")
 _V2 = frozenset("aeiouäö")
@@ -247,17 +246,3 @@ def finnish_snowball_stem(word: str) -> str:
     if k >= 2 and w[k - 1] not in _V1 and w[k - 2] == w[k - 1]:
         w = w[: k - 1] + w[k:]
     return w
-
-
-def finnish_snowball_stem_map(vocab):
-    """(term, new_term) dictionary over a distinct-term frame — the
-    porter_stem_map shape (analysis/stemmer.py)."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("string")
-    def _stem(s: pd.Series) -> pd.Series:
-        return s.map(finnish_snowball_stem)
-
-    return vocab.select(
-        F.col("term"), _stem(F.col("term")).alias("new_term")
-    ).where(F.col("new_term") != F.col("term"))

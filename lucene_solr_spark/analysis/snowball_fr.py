@@ -19,12 +19,11 @@ Runtime-semantics notes:
   un_double (ell/eill/enn/onn/ett lose a letter) and un_accent (é/è
   before trailing non-vowels -> e) always run.
 
-Spark integration is the porter_stem_map shape (analysis/stemmer.py).
+Spark integration is snowball_registry.snowball_stem_map — the
+porter_stem_map shape (analysis/stemmer.py).
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 _VOWELS = frozenset("aeiouyàâèéêëîïôùû")
 _KEEP_WITH_S = frozenset("aiouès")
@@ -328,17 +327,3 @@ def french_snowball_stem(word: str) -> str:
         w = w[:i] + "e" + w[i + 1 :]
 
     return w.replace("I", "i").replace("U", "u").replace("Y", "y")
-
-
-def french_snowball_stem_map(vocab):
-    """(term, new_term) dictionary over a distinct-term frame — the
-    porter_stem_map shape (analysis/stemmer.py)."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("string")
-    def _stem(s: pd.Series) -> pd.Series:
-        return s.map(french_snowball_stem)
-
-    return vocab.select(
-        F.col("term"), _stem(F.col("term")).alias("new_term")
-    ).where(F.col("new_term") != F.col("term"))

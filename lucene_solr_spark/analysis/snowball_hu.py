@@ -17,12 +17,11 @@ Runtime-semantics notes:
   which also halves doubled digraphs like ccs -> cs).
 - Every á-variant suffix rewrites to 'a' and é-variant to 'e'.
 
-Spark integration is the porter_stem_map shape (analysis/stemmer.py).
+Spark integration is snowball_registry.snowball_stem_map — the
+porter_stem_map shape (analysis/stemmer.py).
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 _VOWELS = frozenset("aeiouáéíóöõúüû")
 _DIGRAPHS = ("dzs", "cs", "gy", "ly", "ny", "sz", "ty", "zs")
@@ -153,17 +152,3 @@ def hungarian_snowball_stem(word: str) -> str:
     w = _apply_map(w, _PLUR_OWNER, p1)
     w = _apply_map(w, _PLURAL, p1)
     return w
-
-
-def hungarian_snowball_stem_map(vocab):
-    """(term, new_term) dictionary over a distinct-term frame — the
-    porter_stem_map shape (analysis/stemmer.py)."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("string")
-    def _stem(s: pd.Series) -> pd.Series:
-        return s.map(hungarian_snowball_stem)
-
-    return vocab.select(
-        F.col("term"), _stem(F.col("term")).alias("new_term")
-    ).where(F.col("new_term") != F.col("term"))

@@ -18,12 +18,11 @@ Runtime-semantics notes:
 - Step 3a deletes a final a/e/i/o/à/è/ì/ò in RV then a now-final i in RV;
   step 3b deletes a final h after c/g when the c/g is in RV.
 
-Spark integration is the porter_stem_map shape (analysis/stemmer.py).
+Spark integration is snowball_registry.snowball_stem_map — the
+porter_stem_map shape (analysis/stemmer.py).
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 _VOWELS = frozenset("aeiouàèìòù")
 _AEIO = frozenset("aeioàèìò")
@@ -235,17 +234,3 @@ def italian_snowball_stem(word: str) -> str:
         w = w[:-1]
 
     return w.replace("I", "i").replace("U", "u")
-
-
-def italian_snowball_stem_map(vocab):
-    """(term, new_term) dictionary over a distinct-term frame — the
-    porter_stem_map shape (analysis/stemmer.py)."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("string")
-    def _stem(s: pd.Series) -> pd.Series:
-        return s.map(italian_snowball_stem)
-
-    return vocab.select(
-        F.col("term"), _stem(F.col("term")).alias("new_term")
-    ).where(F.col("new_term") != F.col("term"))

@@ -27,12 +27,11 @@ Runtime-semantics notes:
   consonant outside {v, w, x}; the e-case is fenced by two lookbehind
   exclusions (no a/i/o/u one or two consonant-groups back).
 
-Spark integration is the porter_stem_map shape (analysis/stemmer.py).
+Spark integration is snowball_registry.snowball_stem_map — the
+porter_stem_map shape (analysis/stemmer.py).
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 _V = frozenset("aeiouy")
 _V_WX = frozenset("aeiouywx")
@@ -647,17 +646,3 @@ def kp_stem(word: str) -> str:
     if y_found:
         t.w = t.w.replace("Y", "y")
     return t.w
-
-
-def kp_stem_map(vocab):
-    """(term, new_term) dictionary over a distinct-term frame — the
-    porter_stem_map shape (analysis/stemmer.py)."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("string")
-    def _stem(s: pd.Series) -> pd.Series:
-        return s.map(kp_stem)
-
-    return vocab.select(
-        F.col("term"), _stem(F.col("term")).alias("new_term")
-    ).where(F.col("new_term") != F.col("term"))

@@ -18,12 +18,11 @@ Runtime-semantics notes:
 - The final lose-double-vowel rule turns C(aa|ee|oo|uu)D into CVD when D
   is a non-vowel other than I.
 
-Spark integration is the porter_stem_map shape (analysis/stemmer.py).
+Spark integration is snowball_registry.snowball_stem_map — the
+porter_stem_map shape (analysis/stemmer.py).
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 _VOWELS = frozenset("aeiouyè")
 _VOWELS_J = _VOWELS | {"j"}
@@ -182,17 +181,3 @@ def dutch_snowball_stem(word: str) -> str:
         w = w[:-2] + w[-1]
 
     return w.replace("Y", "y").replace("I", "i")
-
-
-def dutch_snowball_stem_map(vocab):
-    """(term, new_term) dictionary over a distinct-term frame — the
-    porter_stem_map shape (analysis/stemmer.py)."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("string")
-    def _stem(s: pd.Series) -> pd.Series:
-        return s.map(dutch_snowball_stem)
-
-    return vocab.select(
-        F.col("term"), _stem(F.col("term")).alias("new_term")
-    ).where(F.col("new_term") != F.col("term"))

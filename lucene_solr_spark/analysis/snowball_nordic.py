@@ -18,13 +18,12 @@ Runtime-semantics notes:
   undouble equality test) run with the limit restored, so the gating
   characters may sit before R1.
 
-Spark integration is the porter_stem_map shape: vocabulary-level Arrow
-term maps broadcast-joined into the posting build (analysis/stemmer.py).
+Spark integration is snowball_registry.snowball_stem_map — the
+porter_stem_map shape: vocabulary-level Arrow term maps broadcast-joined into
+the posting build (analysis/stemmer.py).
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 _DA_VOWELS = frozenset("aeiouyæåø")
 _NO_VOWELS = frozenset("aeiouyæåø")
@@ -194,23 +193,3 @@ def swedish_snowball_stem(word: str) -> str:
         else:
             w = w[:start]
     return w
-
-
-def nordic_snowball_stem_map(vocab, lang: str):
-    """(term, new_term) dictionary over a distinct-term frame — the
-    porter_stem_map shape (analysis/stemmer.py)."""
-    from pyspark.sql import functions as F
-
-    fn = {
-        "danish": danish_snowball_stem,
-        "norwegian": norwegian_snowball_stem,
-        "swedish": swedish_snowball_stem,
-    }[lang]
-
-    @F.pandas_udf("string")
-    def _stem(s: pd.Series) -> pd.Series:
-        return s.map(fn)
-
-    return vocab.select(
-        F.col("term"), _stem(F.col("term")).alias("new_term")
-    ).where(F.col("new_term") != F.col("term"))

@@ -16,12 +16,11 @@ Runtime-semantics notes:
 - residual_form always runs: final e/é/ê in RV is deleted, then the u of
   a now-final 'gu' (or i of 'ci') is deleted if in RV; final ç becomes c.
 
-Spark integration is the porter_stem_map shape (analysis/stemmer.py).
+Spark integration is snowball_registry.snowball_stem_map — the
+porter_stem_map shape (analysis/stemmer.py).
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 _VOWELS = frozenset("aeiouáéíóúâêô")
 
@@ -198,17 +197,3 @@ def portuguese_snowball_stem(word: str) -> str:
         w = w[:-1] + "c"
 
     return w.replace("a~", "ã").replace("o~", "õ")
-
-
-def portuguese_snowball_stem_map(vocab):
-    """(term, new_term) dictionary over a distinct-term frame — the
-    porter_stem_map shape (analysis/stemmer.py)."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("string")
-    def _stem(s: pd.Series) -> pd.Series:
-        return s.map(portuguese_snowball_stem)
-
-    return vocab.select(
-        F.col("term"), _stem(F.col("term")).alias("new_term")
-    ).where(F.col("new_term") != F.col("term"))

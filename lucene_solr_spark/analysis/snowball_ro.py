@@ -15,12 +15,11 @@ Runtime-semantics notes:
 - The verb step matches inside `setlimit tomark pV` and for group 1
   needs a preceding non-vowel or 'u', itself inside RV.
 
-Spark integration is the porter_stem_map shape (analysis/stemmer.py).
+Spark integration is snowball_registry.snowball_stem_map — the
+porter_stem_map shape (analysis/stemmer.py).
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 _VOWELS = frozenset("aeiouăâî")
 
@@ -209,17 +208,3 @@ def romanian_snowball_stem(word: str) -> str:
         w = w[: len(w) - len(suf)]
 
     return w.replace("I", "i").replace("U", "u")
-
-
-def romanian_snowball_stem_map(vocab):
-    """(term, new_term) dictionary over a distinct-term frame — the
-    porter_stem_map shape (analysis/stemmer.py)."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("string")
-    def _stem(s: pd.Series) -> pd.Series:
-        return s.map(romanian_snowball_stem)
-
-    return vocab.select(
-        F.col("term"), _stem(F.col("term")).alias("new_term")
-    ).where(F.col("new_term") != F.col("term"))

@@ -16,12 +16,11 @@ Runtime-semantics notes:
   suffix's а/я gate fails, that family fails outright (no shorter retry),
   and control falls through to the next family.
 
-Spark integration is the porter_stem_map shape (analysis/stemmer.py).
+Spark integration is snowball_registry.snowball_stem_map — the
+porter_stem_map shape (analysis/stemmer.py).
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 _VOWELS = frozenset("аеиоуыэюя")
 
@@ -178,17 +177,3 @@ def russian_snowball_stem(word: str) -> str:
     if w.endswith("нн") and len(w) - 2 >= pv:
         w = w[:-1]
     return w
-
-
-def russian_snowball_stem_map(vocab):
-    """(term, new_term) dictionary over a distinct-term frame — the
-    porter_stem_map shape (analysis/stemmer.py)."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("string")
-    def _stem(s: pd.Series) -> pd.Series:
-        return s.map(russian_snowball_stem)
-
-    return vocab.select(
-        F.col("term"), _stem(F.col("term")).alias("new_term")
-    ).where(F.col("new_term") != F.col("term"))

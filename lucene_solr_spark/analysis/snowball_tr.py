@@ -33,14 +33,13 @@ correctness depends on):
   the last vowel) BEFORE the final-consonant devoicing b>p c>ç d>t ğ>k —
   so a d-final stem that received a vowel is never devoiced.
 
-Spark integration is the porter_stem_map shape (analysis/stemmer.py):
-one Arrow batch over the |V| distinct terms, broadcast-joined into the
-posting build — the corpus never passes through Python.
+Spark integration is snowball_registry.snowball_stem_map — the
+porter_stem_map shape (analysis/stemmer.py): one Arrow batch over the |V|
+distinct terms, broadcast-joined into the posting build — the corpus never
+passes through Python.
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 _VOWEL = frozenset("aeıioöuü")  # a e ı i o ö u ü
 _U = frozenset("ıiuü")  # ı i u ü
@@ -742,17 +741,3 @@ def turkish_snowball_stem(word: str) -> str:
     _append_u(t)
     _post_process_last_consonants(t)
     return t.w
-
-
-def turkish_snowball_stem_map(vocab):
-    """(term, new_term) dictionary over a distinct-term frame — the
-    porter_stem_map shape (analysis/stemmer.py)."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("string")
-    def _stem(s: pd.Series) -> pd.Series:
-        return s.map(turkish_snowball_stem)
-
-    return vocab.select(
-        F.col("term"), _stem(F.col("term")).alias("new_term")
-    ).where(F.col("new_term") != F.col("term"))

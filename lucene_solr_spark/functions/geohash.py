@@ -219,10 +219,3 @@ def ghhsin_from_quants(
     return F.when(
         (ilat1 == ilat2) & (ilon1 == ilon2), F.lit(0.0)
     ).otherwise(dist)
-
-
-def ghhsin_col(radius: float, gh1: Column, gh2: Column) -> Column:
-    """ghhsin over two geohash STRING columns (the generic path)."""
-    return ghhsin_from_quants(
-        radius, decode_quant_cols(gh1), decode_quant_cols(gh2)
-    )

@@ -27,6 +27,7 @@ Query-side surface:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,7 +40,6 @@ from lucene_solr_spark.search.query import (
     PrefixQuery,
     RangeQuery,
     RegexpQuery,
-    TermQuery,
     WildcardQuery,
 )
 
@@ -104,47 +104,37 @@ def build_multifield_index(
 
 
 def _clause_frames(
-    mfi: MultiFieldIndex, clauses: list[TermQuery]
-) -> tuple[list[DataFrame], list[str]]:
-    """One pivoted (docid, _c<i>...) frame per FIELD covering the given term
-    clauses; returns (frames, per-clause column names in clause order)."""
-    from lucene_solr_spark.search.bm25 import term_scores
-
-    by_field: dict[str, list[tuple[int, str]]] = {}
-    for ci, t in enumerate(clauses):
-        fname = t.field or mfi.default_field
-        by_field.setdefault(fname, []).append((ci, t.term))
-    frames = []
-    for fname, items in by_field.items():
-        idx = mfi.of(fname)
-        terms = list(dict.fromkeys(t for _, t in items))
-        scored = term_scores(idx, terms)
-        aggs = [
-            F.max(F.when(F.col("term") == t, F.col("score"))).alias(f"_c{ci}")
-            for ci, t in items
-        ]
-        frames.append(scored.groupBy("docid").agg(*aggs))
-    return frames, [f"_c{ci}" for ci in range(len(clauses))]
-
-
-def _dedup_field_clauses(
     mfi: MultiFieldIndex, must: tuple, should: tuple
-) -> tuple[list[TermQuery], list[bool]]:
-    """Dedup clauses on (field, term) with bm25._boolean_topk's rules: one
-    scoring contribution per distinct term (required if ANY occurrence is
-    MUST; last occurrence's boost wins, matching the bm25 boosts dict)."""
-    order: list[tuple[str, str]] = []
-    info: dict[tuple[str, str], list] = {}
-    n_must = len(must)
+) -> tuple[list[DataFrame], list[tuple[str, bool, float]]]:
+    """(one pivoted docid frame per FIELD, boolean_combine clauses) for
+    field-tagged term clauses, deduplicated on (field, term): one scoring
+    clause per distinct term, required if ANY occurrence is MUST, last
+    occurrence's boost wins (bm25._boolean_topk's boosts dict)."""
+    from lucene_solr_spark.search.bm25 import pivot_terms, term_scores
+
+    info: dict[tuple[str, str], tuple[bool, float]] = {}
     for i, t in enumerate((*must, *should)):
         key = (t.field or mfi.default_field, t.term)
-        if key not in info:
-            order.append(key)
-            info[key] = [t, i < n_must]
-        else:
-            info[key][0] = t
-            info[key][1] = info[key][1] or (i < n_must)
-    return [info[k][0] for k in order], [info[k][1] for k in order]
+        req = key in info and info[key][0]
+        info[key] = (req or i < len(must), t.boost)
+    by_field: dict[str, list[str]] = {}
+    for fname, term in info:
+        by_field.setdefault(fname, []).append(term)
+    frames, col = [], {}
+    for fi, (fname, terms) in enumerate(by_field.items()):
+        frames.append(pivot_terms(
+            term_scores(mfi.of(fname), terms), terms, prefix=f"_f{fi}c"
+        ))
+        col.update({(fname, t): f"_f{fi}c{j}" for j, t in enumerate(terms)})
+    # clause (= fold) order is first occurrence across fields
+    return frames, [(col[key], *v) for key, v in info.items()]
+
+
+def _must_not_docsets(mfi: MultiFieldIndex, must_not) -> list[DataFrame]:
+    """One MUST_NOT docid frame per (field-routed) excluded term clause."""
+    from lucene_solr_spark.search.bm25 import any_term_docset
+
+    return [any_term_docset(mfi.of(t.field), [t.term]) for t in must_not]
 
 
 def search_fields(
@@ -157,45 +147,16 @@ def search_fields(
     scoring/filter semantics are bm25._boolean_topk's (per-(field,term)
     dedup, fixed-order addition, MUST/mm/MUST_NOT on the composed set,
     round-then-order, docid ties)."""
+    from lucene_solr_spark.search.bm25 import _topk, boolean_combine
+
     if not (q.must or q.should):
         raise ValueError("BooleanQuery needs at least one scoring clause")
-    clauses, required = _dedup_field_clauses(mfi, q.must, q.should)
-    frames, cols = _clause_frames(mfi, clauses)
-    acc = frames[0]
-    for fr in frames[1:]:
-        acc = acc.join(fr, "docid", "full")
-
-    score = F.lit(0.0)
-    for ci, t in enumerate(clauses):
-        c = F.coalesce(F.col(cols[ci]), F.lit(0.0))
-        if t.boost != 1.0:
-            c = c * F.lit(t.boost)
-        score = score + c
-    out = acc.withColumn("score", score)
-
-    for ci, req in enumerate(required):
-        if req:
-            out = out.filter(F.col(cols[ci]).isNotNull())
-    should_cols = [cols[ci] for ci, req in enumerate(required) if not req]
-    mm = q.minimum_should_match
-    if not any(required):
-        mm = max(mm, 1)
-    if should_cols and mm > 0:
-        matched = sum((F.col(c).isNotNull()).cast("int") for c in should_cols)
-        out = out.filter(matched >= mm)
-
-    for t in q.must_not:
-        idx = mfi.of(t.field)
-        excl = (
-            idx.postings.filter(F.col("term") == t.term).select("docid").distinct()
-        )
-        out = out.join(excl, "docid", "left_anti")
-
-    return (
-        out.select("docid", F.round("score", round_dp).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("docid").asc())
-        .limit(k)
+    frames, clauses = _clause_frames(mfi, q.must, q.should)
+    out = boolean_combine(
+        frames, clauses, q.minimum_should_match,
+        _must_not_docsets(mfi, q.must_not), round_dp,
     )
+    return _topk(out, k)
 
 
 def parse_qf(qf: str) -> dict[str, float]:
@@ -225,21 +186,13 @@ def dismax_fields(
     """Solr DisMax over real fields (DisMaxQParser ``qf``): per user term,
     score = max over fields of (field_boost * field_score) + tie * (sum of
     the others); per-doc total = fixed-order sum of term scores."""
-    from lucene_solr_spark.search.bm25 import term_scores
+    from lucene_solr_spark.search.bm25 import _topk, pivot_terms, term_scores
 
     fields = list(qf.items())
-    frames = []
-    for fi, (fname, _boost) in enumerate(fields):
-        idx = mfi.of(fname)
-        scored = term_scores(idx, terms)
-        aggs = [
-            F.max(F.when(F.col("term") == t, F.col("score"))).alias(f"_f{fi}t{ti}")
-            for ti, t in enumerate(terms)
-        ]
-        frames.append(scored.groupBy("docid").agg(*aggs))
-    acc = frames[0]
-    for fr in frames[1:]:
-        acc = acc.join(fr, "docid", "full")
+    acc = reduce(lambda a, b: a.join(b, "docid", "full"), [
+        pivot_terms(term_scores(mfi.of(fname), terms), terms, prefix=f"_f{fi}t")
+        for fi, (fname, _boost) in enumerate(fields)
+    ])
 
     total = F.lit(0.0)
     for ti in range(len(terms)):
@@ -252,11 +205,7 @@ def dismax_fields(
         for p in parts[1:]:
             sm = sm + p
         total = total + (mx + F.lit(tie) * (sm - mx))
-    return (
-        acc.select("docid", F.round(total, round_dp).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("docid").asc())
-        .limit(k)
-    )
+    return _topk(acc.select("docid", F.round(total, round_dp).alias("score")), k)
 
 
 def calculate_min_should_match(optional_count: int, spec: str) -> int:
@@ -319,22 +268,16 @@ def edismax_fields(
     from lucene_solr_spark.search.bm25 import (
         _phrase_topk,
         _sloppy_dispatch,
+        _topk,
+        pivot_terms,
         term_scores,
     )
 
     fields = list(qf.items())
-    frames = []
-    for fi, (fname, _boost) in enumerate(fields):
-        idx = mfi.of(fname)
-        scored = term_scores(idx, terms)
-        aggs = [
-            F.max(F.when(F.col("term") == t, F.col("score"))).alias(f"_f{fi}t{ti}")
-            for ti, t in enumerate(terms)
-        ]
-        frames.append(scored.groupBy("docid").agg(*aggs))
-    acc = frames[0]
-    for fr in frames[1:]:
-        acc = acc.join(fr, "docid", "full")
+    acc = reduce(lambda a, b: a.join(b, "docid", "full"), [
+        pivot_terms(term_scores(mfi.of(fname), terms), terms, prefix=f"_f{fi}t")
+        for fi, (fname, _boost) in enumerate(fields)
+    ])
 
     total = F.lit(0.0)
     matched_terms = F.lit(0)
@@ -394,11 +337,7 @@ def edismax_fields(
                 F.col("_main") + F.coalesce(F.col(f"_bf{i}"), F.lit(0.0)),
             ).drop(f"_bf{i}")
 
-    return (
-        out.select("docid", F.round("_main", round_dp).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("docid").asc())
-        .limit(k)
-    )
+    return _topk(out.select("docid", F.round("_main", round_dp).alias("score")), k)
 
 
 def search_parsed_fields(
@@ -415,6 +354,8 @@ def search_parsed_fields(
         _matched_docset,
         _phrase_topk,
         _sloppy_dispatch,
+        _topk,
+        boolean_combine,
     )
     from lucene_solr_spark.search.parser import CompositeQuery, parse_query
 
@@ -431,14 +372,13 @@ def search_parsed_fields(
     if isinstance(parsed, PhraseQuery):
         idx = mfi.of(parsed.field)
         fn = _sloppy_dispatch if parsed.slop > 0 else _phrase_topk
-        out = fn(idx, parsed, round_dp)
-        return out.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
+        return _topk(fn(idx, parsed, round_dp), k)
     if isinstance(parsed, _MULTITERM):
         boost = float(getattr(parsed, "boost", 1.0))
         out = _matched_docset(mfi.of(parsed.field), parsed).select(
             "docid", F.lit(boost).alias("score")
         )
-        return out.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
+        return _topk(out, k)
 
     assert isinstance(parsed, CompositeQuery)
 
@@ -460,53 +400,20 @@ def search_parsed_fields(
         raise TypeError(type(q))
 
     b = parsed.boolean
-    clauses, required = _dedup_field_clauses(mfi, b.must, b.should)
-    frames: list[DataFrame] = []
-    contribs: list[tuple[str, bool, float]] = []  # (col, required, boost)
-    if clauses:
-        cl_frames, cols = _clause_frames(mfi, clauses)
-        frames.extend(cl_frames)
-        for ci, t in enumerate(clauses):
-            contribs.append((cols[ci], required[ci], t.boost))
+    frames, clauses = _clause_frames(mfi, b.must, b.should)
     specials = [(q, True) for q in parsed.must_specials] + [
         (q, False) for q in parsed.should_specials
     ]
     for j, (q, req) in enumerate(specials):
         frames.append(part_scores(q).withColumnRenamed("score", f"_sp{j}"))
-        contribs.append((f"_sp{j}", req, 1.0))
+        clauses.append((f"_sp{j}", req, 1.0))
     if not frames:
         return empty()
 
-    acc = frames[0]
-    for fr in frames[1:]:
-        acc = acc.join(fr, "docid", "full")
-    score = F.lit(0.0)
-    for name, _req, boost in contribs:
-        c = F.coalesce(F.col(name), F.lit(0.0))
-        if boost != 1.0:
-            c = c * F.lit(boost)
-        score = score + c
-    out = acc.withColumn("score", score)
-    for name, req, _b in contribs:
-        if req:
-            out = out.filter(F.col(name).isNotNull())
-    should_cols = [name for name, req, _b in contribs if not req]
-    mm = b.minimum_should_match
-    if not any(req for _n, req, _b in contribs):
-        mm = max(mm, 1)
-    if should_cols and mm > 0:
-        matched = sum((F.col(n).isNotNull()).cast("int") for n in should_cols)
-        out = out.filter(matched >= mm)
-    for t in b.must_not:
-        idx = mfi.of(t.field)
-        excl = (
-            idx.postings.filter(F.col("term") == t.term).select("docid").distinct()
-        )
-        out = out.join(excl, "docid", "left_anti")
-    for q in parsed.not_specials:
-        out = out.join(part_scores(q).select("docid"), "docid", "left_anti")
-    return (
-        out.select("docid", F.round("score", round_dp).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("docid").asc())
-        .limit(k)
+    excluded = _must_not_docsets(mfi, b.must_not) + [
+        part_scores(q).select("docid") for q in parsed.not_specials
+    ]
+    out = boolean_combine(
+        frames, clauses, b.minimum_should_match, excluded, round_dp
     )
+    return _topk(out, k)

@@ -330,8 +330,9 @@ def bool_sql(
     as_cte: str | None = None,
     prelude: str | None = None,
 ) -> str:
-    """Boolean top-k SQL mirroring bm25._boolean_topk exactly (fixed-order
-    addition, round-then-order, docid tiebreak). If ``as_cte`` is given,
+    """Boolean top-k SQL mirroring bm25._boolean_topk's pivot_terms +
+    boolean_combine frame exactly (fixed-order addition, round-then-order,
+    docid tiebreak). If ``as_cte`` is given,
     returns only the CTE body text (SELECT ... LIMIT k) for composition."""
     boosts = boosts or {}
     terms = list(dict.fromkeys([*must, *should]))

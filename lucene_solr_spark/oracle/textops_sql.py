@@ -266,27 +266,6 @@ WHERE vec_id <> {query_id}
 ORDER BY cosine DESC, vec_id ASC LIMIT {k}"""
 
 
-def lsh_topk_sql(query_id: int, query_bucket: int, planes: int, coeffs: list[list[float]], k: int = 10) -> str:
-    bucket_terms = " + ".join(
-        f"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), {_coef_list_sql(coeffs[p])}) >= 0 "
-        f"THEN CAST({1 << p} AS BIGINT) ELSE 0 END)"
-        for p in range(planes)
-    )
-    return f"""WITH q AS (
-  SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = {query_id}
-),
-b AS (
-  SELECT vec_id, embedding, ({bucket_terms}) AS bucket FROM embeddings
-)
-SELECT vec_id,
-       round(list_dot_product(CAST(embedding AS DOUBLE[]), q.qv)
-             / (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[])))
-                * sqrt(list_dot_product(q.qv, q.qv))), 4) AS cosine
-FROM b CROSS JOIN q
-WHERE bucket = {query_bucket} AND vec_id <> {query_id}
-ORDER BY cosine DESC, vec_id ASC LIMIT {k}"""
-
-
 def embedding_near_dup_sql(planes: int, coeffs: list[list[float]], threshold: float = 0.999) -> str:
     bucket_terms = " + ".join(
         f"(CASE WHEN list_dot_product(v, {_coef_list_sql(coeffs[p])}) >= 0 "

@@ -27,6 +27,8 @@ bounded heap + driver merge, the same algorithm as TopScoreDocCollector.
 
 from __future__ import annotations
 
+from functools import reduce
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -77,6 +79,118 @@ def term_scores(index: IndexTables, terms: list[str]) -> DataFrame:
         "score", F.expr(score_expr_sql(index.max_doc, index.avgdl))
     )
     return scored.select("docid", "term", "score")
+
+
+def query_term_stats(index: IndexTables, terms) -> dict:
+    """{term: Row(term, df, cf)} for the query's terms that are in the
+    dictionary — the bounded driver-side stats lookup (query terms only,
+    never |V|) every driver-side scorer reads its per-term scalars from."""
+    return {
+        r.term: r
+        for r in index.term_stats().filter(F.col("term").isin(list(terms))).collect()
+    }
+
+
+def pivot_terms(
+    scored: DataFrame,
+    terms: list[str],
+    value_for=lambda _t: F.col("score"),
+    prefix: str = "_s",
+) -> DataFrame:
+    """The docid pivot: ONE hash aggregate turning per-posting rows
+    ``(docid, term, ...)`` into one row per doc with a ``{prefix}{i}`` column
+    per term — ``value_for(terms[i])`` evaluated over that term's posting
+    (default: its ``score``), NULL when the doc lacks the term.  A (term,
+    docid) pair has one posting, so ``max`` returns the posting's value
+    unchanged."""
+    return scored.groupBy("docid").agg(*[
+        F.max(F.when(F.col("term") == t, value_for(t))).alias(f"{prefix}{i}")
+        for i, t in enumerate(terms)
+    ])
+
+
+def boolean_combine(
+    frames: list[DataFrame],
+    clauses: list[tuple[str, bool, float]],
+    mm: int,
+    excluded: list[DataFrame],
+    round_dp: int,
+    coord_max: int | None = None,
+) -> DataFrame:
+    """BooleanWeight over per-doc clause columns -> unordered (docid, score).
+
+    ``frames`` are (docid, clause columns...) frames, full-outer-joined on
+    docid; ``clauses`` are ``(column, required, boost)`` in query order.  A
+    column named by several clauses contributes once — in first-occurrence
+    order, with the last clause's boost — and is required if any of its
+    clauses is.  Score is the fixed-order float64 fold
+    ``0.0 + coalesce(c, 0.0)[* boost] + ...`` (never a SUM aggregate),
+    times coord ``overlap * 1.0 / coord_max`` (DefaultSimilarity.java:61-62)
+    when ``coord_max`` > 1.  Every non-required clause counts toward ``mm``;
+    docs in any ``excluded`` docid frame are anti-joined (MUST_NOT); the
+    score is rounded to ``round_dp`` before any ordering."""
+    per_doc = reduce(lambda a, b: a.join(b, "docid", "full"), frames)
+    boosts: dict[str, float] = {}
+    for c, _req, boost in clauses:
+        boosts[c] = boost
+    score = F.lit(0.0)
+    for c, boost in boosts.items():
+        contrib = F.coalesce(F.col(c), F.lit(0.0))
+        if boost != 1.0:
+            contrib = contrib * F.lit(boost)
+        score = score + contrib
+    if coord_max is not None and coord_max > 1:
+        overlap = F.lit(0)
+        for c in boosts:
+            overlap = overlap + F.col(c).isNotNull().cast("int")
+        score = score * (overlap * F.lit(1.0) / F.lit(coord_max))
+    out = per_doc.withColumn("score", score)
+
+    for c in dict.fromkeys(c for c, req, _b in clauses if req):
+        out = out.filter(F.col(c).isNotNull())
+    # a pure-SHOULD query also needs >= 1 optional match (BooleanWeight);
+    # every row of the outer-joined clause frames already has one, so only
+    # mm > 0 adds a filter
+    should = [c for c, req, _b in clauses if not req]
+    if should and mm > 0:
+        matched = sum(F.col(c).isNotNull().cast("int") for c in should)
+        out = out.filter(matched >= mm)
+    for excl in excluded:
+        out = out.join(excl, "docid", "left_anti")
+    return out.select("docid", F.round("score", round_dp).alias("score"))
+
+
+def boolean_term_clauses(
+    q: BooleanQuery, boosted: bool = True
+) -> tuple[list[str], list[tuple[str, bool, float]]]:
+    """(distinct scoring terms in first-occurrence order, clauses) for a
+    boolean of term clauses: one ``(_s{i}, required, boost)`` clause per
+    MUST/SHOULD clause, pointing at term i's pivot column.  ``boosted=False``
+    gives every clause boost 1.0, for scorers whose per-posting score
+    already carries the clause boost."""
+    terms = list(dict.fromkeys(t.term for t in (*q.must, *q.should)))
+    if not terms:
+        raise ValueError("BooleanQuery needs at least one scoring clause")
+    col = {t: f"_s{i}" for i, t in enumerate(terms)}
+    clauses = [
+        (col[t.term], i < len(q.must), t.boost if boosted else 1.0)
+        for i, t in enumerate((*q.must, *q.should))
+    ]
+    return terms, clauses
+
+
+def must_not_docset(index: IndexTables, q: BooleanQuery) -> list[DataFrame]:
+    """The MUST_NOT docid frame of a boolean of term clauses (none if no
+    MUST_NOT clause)."""
+    if not q.must_not:
+        return []
+    return [any_term_docset(index, [t.term for t in q.must_not])]
+
+
+def _topk(out: DataFrame, k: int) -> DataFrame:
+    """Top-k by score desc, docid asc (HitQueue.java:76-81) —
+    TakeOrderedAndProject."""
+    return out.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
 
 
 # BooleanQuery.maxClauseCount (BooleanQuery.java:48-56): the cap on how many
@@ -193,40 +307,12 @@ def _expand_terms(
 def _boolean_topk(
     index: IndexTables, q: BooleanQuery, k: int, round_dp: int
 ) -> DataFrame:
-    must = [t.term for t in q.must]
-    should = [t.term for t in q.should]
-    boosts = {t.term: t.boost for t in (*q.must, *q.should)}
-    terms = list(dict.fromkeys(must + should))
-    if not terms:
-        raise ValueError("BooleanQuery needs at least one scoring clause")
-
-    scored = term_scores(index, terms)
-    aggs = []
-    for i, t in enumerate(terms):
-        aggs.append(F.max(F.when(F.col("term") == t, F.col("score"))).alias(f"_s{i}"))
-    per_doc = scored.groupBy("docid").agg(*aggs)
-
-    # fixed-order float64 addition: s0 + s1 + ... (never a SUM aggregate)
-    score = F.lit(0.0)
-    for i, t in enumerate(terms):
-        contrib = F.coalesce(F.col(f"_s{i}"), F.lit(0.0))
-        if boosts.get(t, 1.0) != 1.0:
-            contrib = contrib * F.lit(boosts[t])
-        score = score + contrib
-    out = per_doc.withColumn("score", score)
-
-    for i, t in enumerate(terms):
-        if t in must:
-            out = out.filter(F.col(f"_s{i}").isNotNull())
-    if should and q.minimum_should_match > 0:
-        matched = sum(
-            (F.col(f"_s{terms.index(t)}").isNotNull()).cast("int") for t in should
-        )
-        out = out.filter(matched >= q.minimum_should_match)
-    if q.must_not:
-        excl = any_term_docset(index, [t.term for t in q.must_not])
-        out = out.join(excl, "docid", "left_anti")
-    return out.select("docid", F.round("score", round_dp).alias("score"))
+    terms, clauses = boolean_term_clauses(q)
+    per_doc = pivot_terms(term_scores(index, terms), terms)
+    return boolean_combine(
+        [per_doc], clauses, q.minimum_should_match,
+        must_not_docset(index, q), round_dp,
+    )
 
 
 def _phrase_topk(index: IndexTables, q: PhraseQuery, round_dp: int) -> DataFrame:
@@ -266,13 +352,10 @@ def _idf_sum_bm25_topk(
     their SQL oracles must evaluate the identical float64 operation order."""
     import math
 
-    stats = {
-        r.term: r.df
-        for r in index.term_stats().filter(F.col("term").isin(list(terms))).collect()
-    }
+    dfs = {t: r.df for t, r in query_term_stats(index, terms).items()}
     n = index.max_doc
     idf_sum = sum(
-        math.log(1.0 + (n - stats.get(t, 0) + 0.5) / (stats.get(t, 0) + 0.5))
+        math.log(1.0 + (n - dfs.get(t, 0) + 0.5) / (dfs.get(t, 0) + 0.5))
         for t in terms
     )
     score = (
@@ -1390,7 +1473,7 @@ def search(
                 )
             if not ordered:
                 return out
-            return out.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
+            return _topk(out, k)
         terms = _expand_terms(index, query)  # bounded by MAX_CLAUSE_COUNT
         if not terms:
             return index.postings.sparkSession.createDataFrame(
@@ -1424,7 +1507,7 @@ def search(
         )
     if not ordered:
         return out
-    return out.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
+    return _topk(out, k)
 
 
 def search_parsed(
@@ -1476,36 +1559,30 @@ def search_parsed(
         raise TypeError(type(q))
 
     # Boolean-of-subqueries (BooleanQuery.java:100-218 over Weight-per-clause):
-    # every scoring clause — term or special — is one (docid, score) frame;
-    # frames full-outer-join on docid, score = fixed-order sum of matching
-    # contributions, and MUST / minimum-should-match / MUST_NOT constraints
-    # apply to the COMPOSED set (a MUST phrase filters term-only docs, a
-    # MUST_NOT term excludes phrase matches, etc.).
+    # every scoring clause — term or special — is one (docid, score) column;
+    # frames full-outer-join on docid and boolean_combine applies MUST /
+    # minimum-should-match / MUST_NOT to the COMPOSED set (a MUST phrase
+    # filters term-only docs, a MUST_NOT term excludes phrase matches, etc.).
+    # Term clauses dedup to one clause per distinct term.
     b = parsed.boolean
     must_terms = [t.term for t in b.must]
-    should_terms = [t.term for t in b.should]
     boosts = {t.term: t.boost for t in (*b.must, *b.should)}
-    bool_terms = list(dict.fromkeys(must_terms + should_terms))
+    bool_terms = list(boosts)
 
     frames: list[DataFrame] = []
-    # (column, required, counts_toward_mm, boost)
-    contribs: list[tuple[str, bool, bool, float]] = []
+    clauses: list[tuple[str, bool, float]] = []
     if bool_terms:
-        scored = term_scores(index, bool_terms)
-        aggs = [
-            F.max(F.when(F.col("term") == t, F.col("score"))).alias(f"_s{i}")
+        frames.append(pivot_terms(term_scores(index, bool_terms), bool_terms))
+        clauses += [
+            (f"_s{i}", t in must_terms, boosts[t])
             for i, t in enumerate(bool_terms)
         ]
-        frames.append(scored.groupBy("docid").agg(*aggs))
-        for i, t in enumerate(bool_terms):
-            req = t in must_terms
-            contribs.append((f"_s{i}", req, not req, boosts.get(t, 1.0)))
     specials = [(q, True) for q in parsed.must_specials] + [
         (q, False) for q in parsed.should_specials
     ]
     for j, (q, req) in enumerate(specials):
         frames.append(part_scores(q).withColumnRenamed("score", f"_sp{j}"))
-        contribs.append((f"_sp{j}", req, not req, 1.0))
+        clauses.append((f"_sp{j}", req, 1.0))
 
     if not frames:
         # must_not-only query: no scoring clause -> MatchNoDocs
@@ -1514,46 +1591,15 @@ def search_parsed(
             [], "docid long, score double"
         )
 
-    acc = frames[0]
-    for f2 in frames[1:]:
-        acc = acc.join(f2, "docid", "full")
-
-    score = F.lit(0.0)
-    for name, _req, _sh, boost in contribs:
-        c = F.coalesce(F.col(name), F.lit(0.0))
-        if boost != 1.0:
-            c = c * F.lit(boost)
-        score = score + c
-    out = acc.withColumn("score", score)
-
-    for name, req, _sh, _b in contribs:
-        if req:
-            out = out.filter(F.col(name).isNotNull())
-    should_cols = [name for name, _req, sh, _b in contribs if sh]
-    has_must = any(req for _n, req, _sh, _b in contribs)
-    mm = b.minimum_should_match
-    if not has_must:
-        mm = max(mm, 1)  # pure-SHOULD boolean needs >=1 optional match
-    if should_cols and mm > 0:
-        matched = sum((F.col(n).isNotNull()).cast("int") for n in should_cols)
-        out = out.filter(matched >= mm)
-
-    if b.must_not:
-        excl = (
-            index.postings.filter(
-                F.col("term").isin([t.term for t in b.must_not])
-            )
-            .select("docid")
-            .distinct()
-        )
-        out = out.join(excl, "docid", "left_anti")
-    for q in parsed.not_specials:
-        out = out.join(part_scores(q).select("docid"), "docid", "left_anti")
-
-    out = out.select("docid", F.round("score", round_dp).alias("score"))
+    excluded = must_not_docset(index, b) + [
+        part_scores(q).select("docid") for q in parsed.not_specials
+    ]
+    out = boolean_combine(
+        frames, clauses, b.minimum_should_match, excluded, round_dp
+    )
     if not ordered:
         return out
-    return out.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
+    return _topk(out, k)
 
 
 def dismax(
@@ -1565,22 +1611,15 @@ def dismax(
 ) -> DataFrame:
     """DisjunctionMaxQuery (DisjunctionMaxQuery.java:45-59): per-doc score is
     max over clause scores plus ``tie`` times the sum of the others."""
-    scored = term_scores(index, clauses)
-    aggs = [
-        F.max(F.when(F.col("term") == t, F.col("score"))).alias(f"_s{i}")
-        for i, t in enumerate(clauses)
-    ]
-    per_doc = scored.groupBy("docid").agg(*aggs)
+    per_doc = pivot_terms(term_scores(index, clauses), clauses)
     cols = [F.coalesce(F.col(f"_s{i}"), F.lit(0.0)) for i in range(len(clauses))]
     mx = F.greatest(*cols) if len(cols) > 1 else cols[0]
     total = cols[0]
     for c in cols[1:]:
         total = total + c
     score = mx + F.lit(tie) * (total - mx)
-    return (
-        per_doc.select("docid", F.round(score, round_dp).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("docid").asc())
-        .limit(k)
+    return _topk(
+        per_doc.select("docid", F.round(score, round_dp).alias("score")), k
     )
 
 
@@ -1651,7 +1690,7 @@ def more_like_this(
             ).alias("score"),
         )
     )
-    return out.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
+    return _topk(out, k)
 
 
 def mlt_interesting_terms(
@@ -1715,12 +1754,7 @@ def rerank(
     re-score as main + weight * rerank-query score, return top k."""
     main = search(index, BooleanQuery.of(should=main_terms, mm=1),
                   k=window, round_dp=round_dp)
-    rr = term_scores(index, rerank_terms)
-    aggs = [
-        F.max(F.when(F.col("term") == t, F.col("score"))).alias(f"_r{i}")
-        for i, t in enumerate(rerank_terms)
-    ]
-    rr_doc = rr.groupBy("docid").agg(*aggs)
+    rr_doc = pivot_terms(term_scores(index, rerank_terms), rerank_terms, prefix="_r")
     joined = main.join(rr_doc, "docid", "left")
     extra = F.lit(0.0)
     for i in range(len(rerank_terms)):

@@ -35,9 +35,10 @@ contributions combine with FIXED-ORDER addition; coord multiplies the sum as
 docid-ascending tie-break.  Rank identity to Lucene's float32 pipeline is
 validated by the pure-Python float32 oracle in tests/test_classic.py.
 
-Scale shape: identical to the BM25 path — postings term-pruned at the scan,
-term stats a bounded driver lookup, pivot is one hash aggregate on docid,
-top-k is TakeOrderedAndProject.  No new shuffle.
+Scale shape: the BM25 boolean frame (bm25.pivot_terms + bm25.boolean_combine)
+— postings term-pruned at the scan, term stats a bounded driver lookup, the
+per-term score evaluated inside the one docid hash aggregate, top-k is
+TakeOrderedAndProject.  No new shuffle.
 """
 
 from __future__ import annotations
@@ -48,7 +49,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.index.builder import IndexTables
-from lucene_solr_spark.search.bm25 import any_term_docset
+from lucene_solr_spark.search.bm25 import (
+    _topk,
+    boolean_combine,
+    boolean_term_clauses,
+    must_not_docset,
+    pivot_terms,
+    query_term_stats,
+)
 from lucene_solr_spark.search.query import BooleanQuery
 
 
@@ -80,66 +88,27 @@ def classic_topk(
 ) -> DataFrame:
     """Top-k under ClassicSimilarity for a boolean query of term clauses.
 
-    Same frame shape as bm25._boolean_topk: one term-pruned postings scan,
-    one pivot aggregate, fixed-order score fold, TakeOrderedAndProject.
+    The per-posting score ``sqrt(tf) * value_t / sqrt(dl_approx)`` is
+    evaluated inside the shared docid pivot (bm25.pivot_terms);
+    bm25.boolean_combine folds it and applies coord over ALL clauses
+    (maxOverlap counts duplicated clauses, like BooleanWeight).
     """
-    must = [t.term for t in q.must]
-    should = [t.term for t in q.should]
+    terms, clauses = boolean_term_clauses(q, boosted=False)
     boosts = {t.term: t.boost for t in (*q.must, *q.should)}
-    terms = list(dict.fromkeys(must + should))
-    if not terms:
-        raise ValueError("classic boolean query needs at least one scoring clause")
+    dfs = {t: r.df for t, r in query_term_stats(index, terms).items()}
+    idf, qn = classic_query_stats(index.max_doc, terms, dfs, boosts)
 
-    n = index.max_doc
-    dfs = {
-        r.term: r.df
-        for r in index.term_stats().filter(F.col("term").isin(terms)).collect()
-    }
-    idf, qn = classic_query_stats(n, terms, dfs, boosts)
+    def value(t: str):
+        # value_t = (idf*boost*queryNorm) * idf  (TFIDFSimilarity.java:761-764)
+        v = (idf[t] * boosts.get(t, 1.0) * qn) * idf[t]
+        return F.sqrt(F.col("tf")) * F.lit(v) / F.sqrt(F.col("dl_approx"))
 
-    p = index.postings.filter(F.col("term").isin(terms))
-    aggs = [
-        F.max(F.when(F.col("term") == t, F.col("tf"))).alias(f"_tf{i}")
-        for i, t in enumerate(terms)
-    ]
-    aggs.append(F.first("dl_approx").alias("dl_approx"))
-    per_doc = p.groupBy("docid").agg(*aggs)
-
-    # fixed-order float64 addition of per-term contributions
-    # value_t = (idf*boost*queryNorm) * idf  (TFIDFSimilarity.java:761-764)
-    total = F.lit(0.0)
-    overlap = F.lit(0)
-    for i, t in enumerate(terms):
-        value = (idf[t] * boosts.get(t, 1.0) * qn) * idf[t]
-        contrib = F.coalesce(
-            F.sqrt(F.col(f"_tf{i}")) * F.lit(value) / F.sqrt(F.col("dl_approx")),
-            F.lit(0.0),
-        )
-        total = total + contrib
-        overlap = overlap + F.col(f"_tf{i}").isNotNull().cast("int")
-
-    max_overlap = len(q.must) + len(q.should)
-    if disable_coord or max_overlap <= 1:
-        score = total
-    else:
-        # coord = overlap / (float) maxOverlap (DefaultSimilarity.java:61-62);
-        # text shape `(c) * 1.0 / maxov` matches the SQL oracle exactly
-        score = total * (overlap * F.lit(1.0) / F.lit(max_overlap))
-
-    out = per_doc.withColumn("score", score)
-    for i, t in enumerate(terms):
-        if t in must:
-            out = out.filter(F.col(f"_tf{i}").isNotNull())
-    if should and q.minimum_should_match > 0:
-        matched = sum(
-            (F.col(f"_tf{terms.index(t)}").isNotNull()).cast("int") for t in should
-        )
-        out = out.filter(matched >= q.minimum_should_match)
-    if q.must_not:
-        excl = any_term_docset(index, [t.term for t in q.must_not])
-        out = out.join(excl, "docid", "left_anti")
-    return (
-        out.select("docid", F.round("score", round_dp).alias("score"))
-        .orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
+    per_doc = pivot_terms(
+        index.postings.filter(F.col("term").isin(terms)), terms, value
     )
+    # coord = overlap / (float) maxOverlap (DefaultSimilarity.java:61-62)
+    coord_max = None if disable_coord else len(q.must) + len(q.should)
+    return _topk(boolean_combine(
+        [per_doc], clauses, q.minimum_should_match, must_not_docset(index, q),
+        round_dp, coord_max,
+    ), k)

@@ -43,7 +43,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.index.builder import IndexTables
-from lucene_solr_spark.search.bm25 import term_scores
+from lucene_solr_spark.search.bm25 import (
+    _topk,
+    pivot_terms,
+    query_term_stats,
+    term_scores,
+)
 
 
 def is_high_freq(df: int, max_term_frequency: float, max_doc: int) -> bool:
@@ -93,19 +98,11 @@ def common_terms_topk(
         raise ValueError("CommonTermsQuery needs at least one term")
 
     n = index.max_doc
-    dfs = {
-        r.term: r.df
-        for r in index.term_stats().filter(F.col("term").isin(terms)).collect()
-    }
+    dfs = {t: r.df for t, r in query_term_stats(index, terms).items()}
     high = [t for t in terms if is_high_freq(dfs.get(t, 0), max_term_frequency, n)]
     low = [t for t in terms if t not in high]
 
-    scored = term_scores(index, terms)
-    aggs = [
-        F.max(F.when(F.col("term") == t, F.col("score"))).alias(f"_s{i}")
-        for i, t in enumerate(terms)
-    ]
-    per_doc = scored.groupBy("docid").agg(*aggs)
+    per_doc = pivot_terms(term_scores(index, terms), terms)
 
     def fold(sub: list[str]):
         """Fixed-order float64 sum over a term subset (original term order)."""
@@ -151,8 +148,4 @@ def common_terms_topk(
         score = fold(low) + F.when(high_ok, fold(high)).otherwise(F.lit(0.0))
         out = per_doc.withColumn("score", score).filter(low_ok)
 
-    return (
-        out.select("docid", F.round("score", round_dp).alias("score"))
-        .orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-    )
+    return _topk(out.select("docid", F.round("score", round_dp).alias("score")), k)

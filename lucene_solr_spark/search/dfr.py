@@ -28,8 +28,9 @@ lucene/core/src/java/org/apache/lucene/search/similarities/):
     dist SPL   = -ln((lambda^(tfn/(tfn+1)) - lambda)/(1-lambda)),
                  lambda==1 -> 0.99              (DistributionSPL.java:34-40)
 
-BooleanQuery composition, float discipline, and the shared pivot frame are
-lm.py's (`_lm_topk`): one term-pruned postings scan, one docid hash
+BooleanQuery composition, float discipline, and the pivot frame are the
+shared bm25.pivot_terms + bm25.boolean_combine: one term-pruned postings
+scan, the per-term score evaluated per posting inside one docid hash
 aggregate, fixed-order float64 addition, round-before-order, docid
 tie-break.  Per-term scalars (the basic-model log2 factor, lambda, F/n
 constants) are float64 ratios of integers computed identically driver-side
@@ -48,7 +49,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.index.builder import IndexTables
-from lucene_solr_spark.search.lm import _lm_topk
+from lucene_solr_spark.search.bm25 import (
+    _topk,
+    boolean_combine,
+    boolean_term_clauses,
+    must_not_docset,
+    pivot_terms,
+    query_term_stats,
+)
 from lucene_solr_spark.search.query import BooleanQuery
 
 _LN2 = math.log(2.0)
@@ -158,24 +166,18 @@ def dfr_topk(
     """Top-k under DFRSimilarity(basicModel, afterEffect, normalization)."""
     if after_effect not in AFTER_EFFECTS:
         raise ValueError(f"unknown after effect: {after_effect!r}")
+    if basic_model not in BASIC_MODELS:
+        raise ValueError(f"unknown basic model: {basic_model!r}")
+    terms, clauses = boolean_term_clauses(q, boosted=False)
     boosts = {t.term: t.boost for t in (*q.must, *q.should)}
     n_docs = index.max_doc
     field_tokens = index.sum_total_term_freq
     avg_fl = field_tokens / float(n_docs)
-    terms = list(dict.fromkeys(
-        [t.term for t in q.must] + [t.term for t in q.should]
-    ))
-    stats = {
-        r.term: (r.df, r.cf)
-        for r in index.term_stats().filter(F.col("term").isin(terms)).collect()
-    }
+    stats = query_term_stats(index, terms)
 
-    if basic_model not in BASIC_MODELS:
-        raise ValueError(f"unknown basic model: {basic_model!r}")
-
-    def contrib(i: int, t: str, _p: float):
-        df_t, cf_t = stats.get(t, (0, 0))
-        tfn = _tfn_col(F.col(f"_tf{i}"), F.col("dl_approx"),
+    def score(t: str):
+        df_t, cf_t = (stats[t].df, stats[t].cf) if t in stats else (0, 0)
+        tfn = _tfn_col(F.col("tf"), F.col("dl_approx"),
                        normalization, c, avg_fl, cf_t, field_tokens)
         basic = _basic_col(basic_model, tfn, n_docs, df_t, cf_t)
         if after_effect == "l":
@@ -184,10 +186,15 @@ def dfr_topk(
             ae = F.lit(float(cf_t + 2)) / (
                 F.lit(float(df_t + 1)) * (tfn + F.lit(1.0))
             )
-        s = F.lit(boosts.get(t, 1.0)) * basic * ae
-        return F.when(F.col(f"_tf{i}").isNotNull(), s)
+        return F.lit(boosts.get(t, 1.0)) * basic * ae
 
-    return _lm_topk(index, q, contrib, k, round_dp)
+    per_doc = pivot_terms(
+        index.postings.filter(F.col("term").isin(terms)), terms, score
+    )
+    return _topk(boolean_combine(
+        [per_doc], clauses, q.minimum_should_match, must_not_docset(index, q),
+        round_dp,
+    ), k)
 
 
 def ib_topk(
@@ -205,25 +212,20 @@ def ib_topk(
         raise ValueError(f"unknown distribution: {distribution!r}")
     if lambda_ not in LAMBDAS:
         raise ValueError(f"unknown lambda: {lambda_!r}")
+    terms, clauses = boolean_term_clauses(q, boosted=False)
     boosts = {t.term: t.boost for t in (*q.must, *q.should)}
     n_docs = index.max_doc
     field_tokens = index.sum_total_term_freq
     avg_fl = field_tokens / float(n_docs)
-    terms = list(dict.fromkeys(
-        [t.term for t in q.must] + [t.term for t in q.should]
-    ))
-    stats = {
-        r.term: (r.df, r.cf)
-        for r in index.term_stats().filter(F.col("term").isin(terms)).collect()
-    }
+    stats = query_term_stats(index, terms)
 
-    def contrib(i: int, t: str, _p: float):
-        df_t, cf_t = stats.get(t, (0, 0))
+    def score(t: str):
+        df_t, cf_t = (stats[t].df, stats[t].cf) if t in stats else (0, 0)
         base = df_t if lambda_ == "df" else cf_t
         lam = (base + 1.0) / (n_docs + 1.0)
         if distribution == "spl" and lam == 1.0:
             lam = 0.99
-        tfn = _tfn_col(F.col(f"_tf{i}"), F.col("dl_approx"),
+        tfn = _tfn_col(F.col("tf"), F.col("dl_approx"),
                        normalization, c, avg_fl, cf_t, field_tokens)
         if distribution == "ll":
             s = -F.log(F.lit(lam) / (tfn + F.lit(lam)))
@@ -232,8 +234,12 @@ def ib_topk(
                 (F.pow(F.lit(lam), tfn / (tfn + F.lit(1.0))) - F.lit(lam))
                 / F.lit(1.0 - lam)
             )
-        return F.when(
-            F.col(f"_tf{i}").isNotNull(), F.lit(boosts.get(t, 1.0)) * s
-        )
+        return F.lit(boosts.get(t, 1.0)) * s
 
-    return _lm_topk(index, q, contrib, k, round_dp)
+    per_doc = pivot_terms(
+        index.postings.filter(F.col("term").isin(terms)), terms, score
+    )
+    return _topk(boolean_combine(
+        [per_doc], clauses, q.minimum_should_match, must_not_docset(index, q),
+        round_dp,
+    ), k)

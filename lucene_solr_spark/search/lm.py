@@ -18,10 +18,11 @@ Math is SimilarityBase/LMSimilarity (/root/reference):
       score = boost * ln(1 + ((1-lambda) * tf / docLen) / (lambda * p))
 
 BooleanQuery sums per-term scores (no coord), MUST clauses filter, NOT
-clauses anti-join — same frame shape as classic_topk / bm25._boolean_topk:
-one term-pruned postings scan, one pivot hash-aggregate on docid,
-fixed-order float64 addition of per-term contributions, round(score,
-round_dp) BEFORE ordering, docid-ascending tie-break.
+clauses anti-join — the shared boolean frame (bm25.pivot_terms +
+bm25.boolean_combine): one term-pruned postings scan, the per-term score
+evaluated per posting inside one pivot hash-aggregate on docid, fixed-order
+float64 addition of per-term contributions, round(score, round_dp) BEFORE
+ordering, docid-ascending tie-break.
 
 Determinism across engines: per-term p(t|C) is a float64 ratio of two
 integers (cf, F) — the Spark path computes it driver-side from the term
@@ -42,7 +43,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.index.builder import IndexTables
-from lucene_solr_spark.search.bm25 import any_term_docset
+from lucene_solr_spark.search.bm25 import (
+    _topk,
+    boolean_combine,
+    boolean_term_clauses,
+    must_not_docset,
+    pivot_terms,
+    query_term_stats,
+)
 from lucene_solr_spark.search.query import BooleanQuery
 
 
@@ -50,59 +58,6 @@ def collection_probability(cf: int, field_tokens: int) -> float:
     """LMSimilarity.DefaultCollectionModel.computeProbability
     (LMSimilarity.java:153-154) in float64."""
     return (cf + 1.0) / (field_tokens + 1.0)
-
-
-def _lm_topk(
-    index: IndexTables,
-    q: BooleanQuery,
-    contrib_for,
-    k: int,
-    round_dp: int,
-) -> DataFrame:
-    """Shared boolean-of-terms LM frame; ``contrib_for(i, term, p)`` returns
-    the per-term score Column over the pivoted ``_tf{i}`` / ``dl_approx``."""
-    must = [t.term for t in q.must]
-    should = [t.term for t in q.should]
-    terms = list(dict.fromkeys(must + should))
-    if not terms:
-        raise ValueError("LM boolean query needs at least one scoring clause")
-
-    field_tokens = index.sum_total_term_freq
-    cfs = {
-        r.term: r.cf
-        for r in index.term_stats().filter(F.col("term").isin(terms)).collect()
-    }
-    p = {t: collection_probability(cfs.get(t, 0), field_tokens) for t in terms}
-
-    postings = index.postings.filter(F.col("term").isin(terms))
-    aggs = [
-        F.max(F.when(F.col("term") == t, F.col("tf"))).alias(f"_tf{i}")
-        for i, t in enumerate(terms)
-    ]
-    aggs.append(F.first("dl_approx").alias("dl_approx"))
-    per_doc = postings.groupBy("docid").agg(*aggs)
-
-    total = F.lit(0.0)
-    for i, t in enumerate(terms):
-        total = total + F.coalesce(contrib_for(i, t, p[t]), F.lit(0.0))
-
-    out = per_doc.withColumn("score", total)
-    for i, t in enumerate(terms):
-        if t in must:
-            out = out.filter(F.col(f"_tf{i}").isNotNull())
-    if should and q.minimum_should_match > 0:
-        matched = sum(
-            (F.col(f"_tf{terms.index(t)}").isNotNull()).cast("int") for t in should
-        )
-        out = out.filter(matched >= q.minimum_should_match)
-    if q.must_not:
-        excl = any_term_docset(index, [t.term for t in q.must_not])
-        out = out.join(excl, "docid", "left_anti")
-    return (
-        out.select("docid", F.round("score", round_dp).alias("score"))
-        .orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-    )
 
 
 def lm_dirichlet_topk(
@@ -113,19 +68,29 @@ def lm_dirichlet_topk(
     round_dp: int = 4,
 ) -> DataFrame:
     """Top-k under LMDirichletSimilarity (LMDirichletSimilarity.java:65-69)."""
+    terms, clauses = boolean_term_clauses(q, boosted=False)
     boosts = {t.term: t.boost for t in (*q.must, *q.should)}
+    stats = query_term_stats(index, terms)
 
-    def contrib(i: int, t: str, p: float):
+    def score(t: str):
+        p = collection_probability(
+            stats[t].cf if t in stats else 0, index.sum_total_term_freq
+        )
         # s = boost * (ln(1 + tf/(mu*p)) + ln(mu/(docLen+mu)));
         # score = s if s > 0 else 0  (java :69) — same CASE text as the oracle
         s = F.lit(boosts.get(t, 1.0)) * (
-            F.log(F.lit(1.0) + F.col(f"_tf{i}") / F.lit(mu * p))
+            F.log(F.lit(1.0) + F.col("tf") / F.lit(mu * p))
             + F.log(F.lit(mu) / (F.col("dl_approx") + F.lit(mu)))
         )
-        return F.when(F.col(f"_tf{i}").isNotNull(),
-                      F.when(s > 0, s).otherwise(F.lit(0.0)))
+        return F.when(s > 0, s).otherwise(F.lit(0.0))
 
-    return _lm_topk(index, q, contrib, k, round_dp)
+    per_doc = pivot_terms(
+        index.postings.filter(F.col("term").isin(terms)), terms, score
+    )
+    return _topk(boolean_combine(
+        [per_doc], clauses, q.minimum_should_match, must_not_docset(index, q),
+        round_dp,
+    ), k)
 
 
 def lm_jelinek_mercer_topk(
@@ -137,13 +102,24 @@ def lm_jelinek_mercer_topk(
 ) -> DataFrame:
     """Top-k under LMJelinekMercerSimilarity
     (LMJelinekMercerSimilarity.java:53-58; Solr's default lambda 0.7)."""
+    terms, clauses = boolean_term_clauses(q, boosted=False)
     boosts = {t.term: t.boost for t in (*q.must, *q.should)}
+    stats = query_term_stats(index, terms)
 
-    def contrib(i: int, t: str, p: float):
+    def score(t: str):
+        p = collection_probability(
+            stats[t].cf if t in stats else 0, index.sum_total_term_freq
+        )
         return F.lit(boosts.get(t, 1.0)) * F.log(
             F.lit(1.0)
-            + ((F.lit(1.0 - lam) * F.col(f"_tf{i}") / F.col("dl_approx"))
+            + ((F.lit(1.0 - lam) * F.col("tf") / F.col("dl_approx"))
                / F.lit(lam * p))
         )
 
-    return _lm_topk(index, q, contrib, k, round_dp)
+    per_doc = pivot_terms(
+        index.postings.filter(F.col("term").isin(terms)), terms, score
+    )
+    return _topk(boolean_combine(
+        [per_doc], clauses, q.minimum_should_match, must_not_docset(index, q),
+        round_dp,
+    ), k)

@@ -87,6 +87,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.index.builder import IndexTables
+from lucene_solr_spark.search.bm25 import _topk
 from lucene_solr_spark.search.query import (
     BooleanQuery,
     PhraseQuery,
@@ -131,10 +132,6 @@ def parse_local_params(q: str) -> tuple[str, dict[str, str], str]:
     if body is None:
         body = m.group("body").strip()
     return qtype, params, body
-
-
-def _topk(out: DataFrame, k: int) -> DataFrame:
-    return out.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
 
 
 def _constant_hits(docids: DataFrame, boost: float) -> DataFrame:
@@ -313,7 +310,7 @@ def _maxscore_qparser(index, params, body, k, round_dp):
     """MaxScoreQParser.java:43-77: parses like the lucene parser but wraps all
     SHOULD clauses in a DisjunctionMaxQuery with tie=0 (local param ``tie``
     overrides) — per-doc score = sum(MUST) + max(SHOULD) + tie*rest."""
-    from lucene_solr_spark.search.bm25 import term_scores
+    from lucene_solr_spark.search.bm25 import pivot_terms, term_scores
     from lucene_solr_spark.search.parser import CompositeQuery, parse_query
 
     tie = float(params.get("tie", 0.0))
@@ -330,12 +327,7 @@ def _maxscore_qparser(index, params, body, k, round_dp):
     terms = list(dict.fromkeys(must + should))
     if not terms:
         return _empty(index)
-    scored = term_scores(index, terms)
-    aggs = [
-        F.max(F.when(F.col("term") == t, F.col("score"))).alias(f"_s{i}")
-        for i, t in enumerate(terms)
-    ]
-    per_doc = scored.groupBy("docid").agg(*aggs)
+    per_doc = pivot_terms(term_scores(index, terms), terms)
 
     def _contrib(t: str):
         c = F.coalesce(F.col(f"_s{terms.index(t)}"), F.lit(0.0))

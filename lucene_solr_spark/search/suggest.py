@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.index.builder import IndexTables
+from lucene_solr_spark.search.bm25 import pivot_terms
 
 
 def spellcheck(
@@ -302,12 +303,9 @@ def collate(
         return spark.createDataFrame([], "collation_query string, hits long")
     context = [t.lower() for t in context_terms]
     all_terms = list(dict.fromkeys(cands + context))
-    p = index.postings.filter(F.col("term").isin(all_terms))
-    pres = p.groupBy("docid").agg(
-        *[
-            F.max(F.when(F.col("term") == t, F.lit(1))).alias(f"_t{i}")
-            for i, t in enumerate(all_terms)
-        ]
+    pres = pivot_terms(
+        index.postings.filter(F.col("term").isin(all_terms)), all_terms,
+        lambda _t: F.lit(1), "_t",
     )
     ctx_ok = F.lit(True)
     for t in context:
@@ -466,7 +464,8 @@ def suggest_word_breaks(
     compound into two dictionary words ('timeout' -> 'time out').
 
     All len-1 split candidates of one term are a tiny literal frame; ONE
-    semi-joined pass over the term dictionary validates both halves
+    pass over the term dictionary filtered to the candidate halves (a
+    query-bounded broadcast, never |V|) validates both halves
     (df >= minSuggestionFrequency); ranking is summed frequency desc
     (NUM_CHANGES_THEN_SUMMED_FREQUENCY with a single change level), then
     the split text asc."""
@@ -478,7 +477,8 @@ def suggest_word_breaks(
     if not cands:
         return spark.createDataFrame([], "suggestion string, freq long")
     c = spark.createDataFrame(cands, "left string, right string")
-    stats = index.term_stats().select("term", "df")
+    halves = [w for pair in cands for w in pair]
+    stats = index.term_stats().filter(F.col("term").isin(halves)).select("term", "df")
     out = (
         c.join(F.broadcast(stats.withColumnRenamed("df", "df_l")),
                c.left == F.col("term")).drop("term")
@@ -504,7 +504,8 @@ def suggest_word_combinations(
 ) -> DataFrame:
     """WordBreakSpellChecker.suggestWordCombinations (:172-240): adjacent
     query terms whose concatenation is a dictionary word ('time out' ->
-    'timeout'), ranked by the combined word's frequency desc."""
+    'timeout'), ranked by the combined word's frequency desc.  Only the
+    candidate words are looked up, so the broadcast is query-bounded."""
     spark = index.docs.sparkSession
     cands = [
         (i, terms[i] + terms[i + 1])
@@ -514,7 +515,8 @@ def suggest_word_combinations(
     if not cands:
         return spark.createDataFrame([], "position int, suggestion string, freq long")
     c = spark.createDataFrame(cands, "position int, combined string")
-    stats = index.term_stats().select("term", "df")
+    words = [w for _, w in cands]
+    stats = index.term_stats().filter(F.col("term").isin(words)).select("term", "df")
     return (
         c.join(F.broadcast(stats), c.combined == F.col("term"))
         .where(F.col("df") >= min_freq)

@@ -25,11 +25,11 @@ stored 1/sqrt(dl) byte, so the scorer recovers the exact token count
 range table shared verbatim with the DuckDB oracle (a VALUES CTE), so the
 float32 quantization crosses the engines as DATA, never as float logic.
 
-Scale shape: identical to classic_topk plus one broadcast range join against
-the <=256-row norm table and one docid join against docs for ``num_terms``
-(both sides of that join are pruned: postings term-filtered at the scan, docs
-column-pruned to (docid, num_terms)).  No new shuffle beyond the existing
-pivot aggregate; top-k is TakeOrderedAndProject.
+Scale shape: classic_topk's frame plus one docid join against docs for
+``num_terms`` and one broadcast range join against the <=256-row norm table,
+both on the term-pruned postings before the pivot (docs column-pruned to
+(docid, num_terms)).  No new shuffle beyond the pivot aggregate and that
+docid join; top-k is TakeOrderedAndProject.
 """
 
 from __future__ import annotations
@@ -38,7 +38,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.index.builder import IndexTables
-from lucene_solr_spark.search.bm25 import any_term_docset
+from lucene_solr_spark.search.bm25 import (
+    _topk,
+    boolean_combine,
+    boolean_term_clauses,
+    must_not_docset,
+    pivot_terms,
+    query_term_stats,
+)
 from lucene_solr_spark.search.classic import classic_query_stats
 from lucene_solr_spark.search.query import BooleanQuery
 from lucene_solr_spark.smallfloat import sweetspot_norm_ranges
@@ -103,79 +110,41 @@ def sweetspot_topk(
 ) -> DataFrame:
     """Top-k under SweetSpotSimilarity for a boolean query of term clauses.
 
-    Same frame shape as classic_topk: one term-pruned postings scan, one
-    pivot aggregate, docid join for exact num_terms, broadcast range join
-    for the quantized plateau norm, fixed-order float64 score fold,
-    TakeOrderedAndProject.
+    The term-pruned postings join docs for the exact ``num_terms`` and the
+    broadcast range table for the quantized plateau norm; the per-posting
+    score ``tf(freq) * value_t * ss_norm`` is then evaluated inside the
+    shared docid pivot (bm25.pivot_terms) and combined with classic coord by
+    bm25.boolean_combine.
     """
-    must = [t.term for t in q.must]
-    should = [t.term for t in q.should]
+    if tf_mode == "baseline":
+        tf = baseline_tf_col(F.col("tf"), tf_base, tf_min)
+    elif tf_mode == "hyperbolic":
+        tf = hyperbolic_tf_col(
+            F.col("tf"), hyper_min, hyper_max, hyper_base, hyper_xoffset
+        )
+    else:
+        raise ValueError(f"unknown tf_mode {tf_mode!r}")
+    terms, clauses = boolean_term_clauses(q, boosted=False)
     boosts = {t.term: t.boost for t in (*q.must, *q.should)}
-    terms = list(dict.fromkeys(must + should))
-    if not terms:
-        raise ValueError("sweetspot boolean query needs at least one scoring clause")
-
-    n = index.max_doc
-    dfs = {
-        r.term: r.df
-        for r in index.term_stats().filter(F.col("term").isin(terms)).collect()
-    }
+    dfs = {t: r.df for t, r in query_term_stats(index, terms).items()}
     # idf / queryNorm / squared-idf scorer value inherited from DefaultSimilarity
-    idf, qn = classic_query_stats(n, terms, dfs, boosts)
+    idf, qn = classic_query_stats(index.max_doc, terms, dfs, boosts)
 
-    p = index.postings.filter(F.col("term").isin(terms))
-    aggs = [
-        F.max(F.when(F.col("term") == t, F.col("tf"))).alias(f"_tf{i}")
-        for i, t in enumerate(terms)
-    ]
-    per_doc = p.groupBy("docid").agg(*aggs)
-    per_doc = per_doc.join(
+    def value(t: str):
+        v = (idf[t] * boosts.get(t, 1.0) * qn) * idf[t]
+        return tf * F.lit(v) * F.col("ss_norm")
+
+    p = index.postings.filter(F.col("term").isin(terms)).join(
         index.docs.select("docid", "num_terms"), "docid", "inner"
     )
     norms = sweetspot_norm_df(index, ln_min, ln_max, steepness)
-    per_doc = per_doc.join(
+    p = p.join(
         F.broadcast(norms),
         (F.col("num_terms") >= F.col("dl_lo")) & (F.col("num_terms") <= F.col("dl_hi")),
     )
-
-    def tf_fn(col: Column) -> Column:
-        if tf_mode == "baseline":
-            return baseline_tf_col(col, tf_base, tf_min)
-        if tf_mode == "hyperbolic":
-            return hyperbolic_tf_col(col, hyper_min, hyper_max, hyper_base, hyper_xoffset)
-        raise ValueError(f"unknown tf_mode {tf_mode!r}")
-
-    total = F.lit(0.0)
-    overlap = F.lit(0)
-    for i, t in enumerate(terms):
-        value = (idf[t] * boosts.get(t, 1.0) * qn) * idf[t]
-        contrib = F.coalesce(
-            tf_fn(F.col(f"_tf{i}")) * F.lit(value) * F.col("ss_norm"),
-            F.lit(0.0),
-        )
-        total = total + contrib
-        overlap = overlap + F.col(f"_tf{i}").isNotNull().cast("int")
-
-    max_overlap = len(q.must) + len(q.should)
-    if disable_coord or max_overlap <= 1:
-        score = total
-    else:
-        score = total * (overlap * F.lit(1.0) / F.lit(max_overlap))
-
-    out = per_doc.withColumn("score", score)
-    for i, t in enumerate(terms):
-        if t in must:
-            out = out.filter(F.col(f"_tf{i}").isNotNull())
-    if should and q.minimum_should_match > 0:
-        matched = sum(
-            (F.col(f"_tf{terms.index(t)}").isNotNull()).cast("int") for t in should
-        )
-        out = out.filter(matched >= q.minimum_should_match)
-    if q.must_not:
-        excl = any_term_docset(index, [t.term for t in q.must_not])
-        out = out.join(excl, "docid", "left_anti")
-    return (
-        out.select("docid", F.round("score", round_dp).alias("score"))
-        .orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-    )
+    per_doc = pivot_terms(p, terms, value)
+    coord_max = None if disable_coord else len(q.must) + len(q.should)
+    return _topk(boolean_combine(
+        [per_doc], clauses, q.minimum_should_match, must_not_docset(index, q),
+        round_dp, coord_max,
+    ), k)

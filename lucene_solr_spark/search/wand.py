@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from lucene_solr_spark.index.builder import IndexTables
 from lucene_solr_spark.index.codec import block_max_partial_bound, decode_block
 from lucene_solr_spark.index.compress import get_compressed
+from lucene_solr_spark.search.bm25 import query_term_stats
 from lucene_solr_spark.search.query import BooleanQuery, TermQuery
 from lucene_solr_spark.smallfloat import NORM_TABLE
 
@@ -295,10 +296,7 @@ def wand_search(
         raise ValueError("BooleanQuery needs at least one scoring clause")
 
     n = index.max_doc
-    df_map = {
-        r["term"]: r["df"]
-        for r in index.term_stats().filter(F.col("term").isin(term_order)).collect()
-    }
+    df_map = {t: r.df for t, r in query_term_stats(index, term_order).items()}
     term_meta = {}
     for t in term_order:
         df = df_map.get(t, 0)

@@ -205,7 +205,7 @@ def test_ib_rank_identity(index, oracle, dist, lam, norm):
 
 
 def test_dfr_boolean_composition(index):
-    # MUST filters, NOT excludes — shared _lm_topk machinery
+    # MUST filters, NOT excludes — the shared bm25.boolean_combine
     q = BooleanQuery.of(must=["table"], must_not=["slow"])
     rows = dfr_topk(index, q, k=20).collect()
     assert rows

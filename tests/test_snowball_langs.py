@@ -14,14 +14,13 @@ import pytest
 from lucene_solr_spark.analysis.snowball_de import (
     german2_snowball_stem,
     german_snowball_stem,
-    german_snowball_stem_map,
 )
 from lucene_solr_spark.analysis.snowball_nordic import (
     danish_snowball_stem,
-    nordic_snowball_stem_map,
     norwegian_snowball_stem,
     swedish_snowball_stem,
 )
+from lucene_solr_spark.analysis.snowball_registry import snowball_stem_map
 
 _DATA = os.path.join(os.path.dirname(__file__), "data")
 
@@ -79,11 +78,11 @@ def test_term_map_frames(spark):
     )
     got = {
         r.term: r.new_term
-        for r in german_snowball_stem_map(vocab).collect()
+        for r in snowball_stem_map(vocab, "German").collect()
     }
     assert got["häusern"] == german_snowball_stem("häusern")
     got_da = {
         r.term: r.new_term
-        for r in nordic_snowball_stem_map(vocab, "danish").collect()
+        for r in snowball_stem_map(vocab, "Danish").collect()
     }
     assert got_da["bestemmelse"] == "bestem"

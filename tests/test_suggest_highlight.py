@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -366,6 +368,37 @@ def test_word_combinations(wb_index):
     ]
     # 'timeout' df=2 from adjacent pair at position 0; 'outfires' absent
     assert got == [(0, "timeout", 2)]
+
+
+@pytest.mark.parametrize("kind", ["breaks", "combinations"])
+def test_word_break_broadcast_is_candidate_bounded(wb_index, kind):
+    """The dictionary side of the WordBreak joins is filtered to the
+    candidate words (term IN (...)) below the join, so no |V|-sized
+    dictionary is broadcast; the suggestions are unchanged."""
+    from lucene_solr_spark.search.suggest import (
+        suggest_word_breaks,
+        suggest_word_combinations,
+    )
+    from tests.plans import plan_nodes, subtree
+
+    if kind == "breaks":
+        out = suggest_word_breaks(wb_index, "timeout")
+        assert [(r.suggestion, r.freq) for r in out.collect()] == [("time out", 5)]
+    else:
+        out = suggest_word_combinations(wb_index, ["time", "out", "fires"])
+        got = [(r.position, r.suggestion, r.freq) for r in out.collect()]
+        assert got == [(0, "timeout", 2)]
+    nodes = plan_nodes(out)
+    dictionary_broadcasts = [
+        subtree(nodes, i) for i, n in enumerate(nodes)
+        if n.lstrip().startswith("BroadcastExchange")
+        and any("InMemoryTableScan" in m for m in subtree(nodes, i))
+    ]
+    assert dictionary_broadcasts, "\n".join(nodes)
+    for sub in dictionary_broadcasts:  # IN (...) or, past 10 values, INSET
+        assert any(re.search(r"term#\d+ (IN \(|INSET )", m) for m in sub), (
+            "\n".join(sub)
+        )
 
 
 def test_spellcheck_direct_gates(spark, sf_dir):
