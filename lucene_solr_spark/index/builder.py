@@ -366,10 +366,10 @@ def build_index(
     # ---- term dictionary + per-term stats -----------------------------------
     # One bounded-width row per term: (term, df, cf) — a plain two-phase
     # (map-side partial + merge) hash aggregate, the same shape the persisted
-    # store exposes (store.load_index / load_streaming_index).  The per-term
-    # global posting ARRAYS that used to live here are gone from the default
-    # build: at web scale a head term's posting list is a multi-GB single row
-    # (executor OOM).  The scale path keeps postings encoded per
+    # store exposes (store.load_index).  The per-term global posting ARRAYS
+    # that used to live here are gone from the default build: at web scale a
+    # head term's posting list is a multi-GB single row (executor OOM).  The
+    # scale path keeps postings encoded per
     # (partition, term-bucket) in the compressed codec tables (compress.py);
     # global arrays remain available for CheckIndex/tests via
     # ``segment_arrays``.

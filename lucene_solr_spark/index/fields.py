@@ -132,9 +132,9 @@ def _clause_frames(
 
 def _must_not_docsets(mfi: MultiFieldIndex, must_not) -> list[DataFrame]:
     """One MUST_NOT docid frame per (field-routed) excluded term clause."""
-    from lucene_solr_spark.search.bm25 import any_term_docset
+    from lucene_solr_spark.search.bm25 import _term_docids
 
-    return [any_term_docset(mfi.of(t.field), [t.term]) for t in must_not]
+    return [_term_docids(mfi.of(t.field), [t.term]) for t in must_not]
 
 
 def search_fields(

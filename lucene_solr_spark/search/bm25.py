@@ -184,7 +184,7 @@ def must_not_docset(index: IndexTables, q: BooleanQuery) -> list[DataFrame]:
     MUST_NOT clause)."""
     if not q.must_not:
         return []
-    return [any_term_docset(index, [t.term for t in q.must_not])]
+    return [_term_docids(index, [t.term for t in q.must_not])]
 
 
 def _topk(out: DataFrame, k: int) -> DataFrame:
@@ -264,14 +264,17 @@ def _matched_terms_df(index: IndexTables, q) -> DataFrame:
     raise TypeError(type(q))
 
 
+def _term_docids(index: IndexTables, terms: list[str]) -> DataFrame:
+    """The docid of every posting of ANY of the terms, repeated per matching
+    term: enough for the right side of a left-anti join, which needs no
+    distinct keys (and so no shuffle)."""
+    return index.postings.filter(F.col("term").isin(list(terms))).select("docid")
+
+
 def any_term_docset(index: IndexTables, terms: list[str]) -> DataFrame:
     """The DocSet primitive: distinct docids containing ANY of the terms
     (SolrIndexSearcher.getDocSet over a term disjunction)."""
-    return (
-        index.postings.filter(F.col("term").isin(list(terms)))
-        .select("docid")
-        .distinct()
-    )
+    return _term_docids(index, terms).distinct()
 
 
 def _matched_docset(index: IndexTables, q) -> DataFrame:

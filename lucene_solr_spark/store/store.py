@@ -17,6 +17,17 @@ The Lucene/Solr durability surface re-expressed for shared storage:
   rebuilds only missing partitions — resumable, idempotent (partition dirs
   are overwritten via dynamic partition overwrite on retry).
 
+This module owns the on-disk layout for every kind of store.  A store is a
+set of **units**: a batch store's units are its ``index_partition=<p>``
+directories, a streaming (or compacted) store's are its ``gen=<n>``
+directories, each holding that generation's index partitions.  Each unit
+has three layers (docs, compressed segments, optional compressed
+positions).  One writer (``_write_unit``) writes a unit for the batch
+build, the multi-field build, a streaming generation and a merge; one
+reader (``load_index``) opens exactly the snapshot's committed units; one
+merge (``_merge_generations``) rewrites generations into one, as
+Lucene's single SegmentMerger runs every merge a MergePolicy picks.
+
 Scale shape: each build batch touches only its partitions' source rows
 (partition pruning on the hash-routed ``index_partition``), writes are
 append-only per partition, and a 1000-executor cluster commits snapshots at
@@ -28,6 +39,7 @@ from __future__ import annotations
 import functools
 import json
 import os
+import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -35,7 +47,7 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -48,10 +60,7 @@ from pyspark.sql.types import (
 
 from lucene_solr_spark.index.builder import IndexTables, build_index
 from lucene_solr_spark.index.codec import vb_decode
-from lucene_solr_spark.index.compress import (
-    build_compressed_segments,
-    compress_positions,
-)
+from lucene_solr_spark.index.compress import compress_positions, compress_postings
 from lucene_solr_spark.smallfloat import NORM_TABLE
 
 
@@ -145,13 +154,105 @@ class IndexStore:
         return spark.read.parquet(self.metrics_path)
 
 
-def _write_partitioned(df: DataFrame, path: str) -> None:
+def _head(store: IndexStore) -> Snapshot:
+    snap = store.head()
+    if snap is None:
+        raise FileNotFoundError(f"no committed snapshot at {store.root}")
+    return snap
+
+
+def _successor(snap: Snapshot | None, **changes) -> Snapshot:
+    """The snapshot committed after ``snap`` (the first one when None):
+    ``snap``'s fields with ``changes`` applied."""
+    if snap is None:
+        return Snapshot(snapshot_id=1, parent_id=None, **changes)
+    return Snapshot(
+        **{
+            **snap.__dict__,
+            "snapshot_id": snap.snapshot_id + 1,
+            "parent_id": snap.snapshot_id,
+            **changes,
+        }
+    )
+
+
+def _append_lineage(spark: SparkSession, store: IndexStore, rows: list) -> None:
+    spark.createDataFrame(
+        rows,
+        "index_partition int, status string, n_docs long, sum_tf long, "
+        "wall_s double, snapshot_id int",
+    ).write.mode("append").parquet(store.lineage_path)
+
+
+# -- units: the layout every reader and writer shares ------------------------
+
+
+def _unit_dir(layer_path: str, gen: int | None) -> str:
+    """A layer's directory for one write: the layer root for batch units
+    (its index_partition dirs), ``gen=<n>`` for a generation."""
+    return layer_path if gen is None else os.path.join(layer_path, f"gen={gen}")
+
+
+def _committed(snap: Snapshot) -> Column:
+    """The snapshot's committed units: its generations when it tracks them,
+    else its committed index partitions.  Directories outside this set (an
+    in-flight batch, a crashed generation, a merge's not-yet-removed
+    sources) are never read."""
+    if snap.gens:
+        return F.col("gen").isin(snap.gens)
+    return F.col("index_partition").isin(snap.committed_partitions)
+
+
+def _read_layer(spark: SparkSession, layer_path: str, keep: Column) -> DataFrame:
+    # basePath: both layouts infer their partition columns the same way
+    return spark.read.option("basePath", layer_path).parquet(layer_path).filter(keep)
+
+
+def _has_positions(store: IndexStore, gens: list | None) -> bool:
+    """Positions are readable only when EVERY unit persisted them: a unit
+    written with build_positions=False leaves phrase queries to an in-memory
+    rebuild rather than silently missing its occurrences."""
+    units = gens if gens else [None]
+    return all(os.path.isdir(_unit_dir(store.positions_path, g)) for g in units)
+
+
+def _write_layer(df: DataFrame, layer_path: str, gen: int | None) -> None:
+    # a resumed batch replaces only its own partitions; a replayed
+    # generation replaces its whole gen=<n> directory
     (
         df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
+        .option("partitionOverwriteMode", "dynamic" if gen is None else "static")
         .partitionBy("index_partition")
-        .parquet(path)
+        .parquet(_unit_dir(layer_path, gen))
     )
+
+
+def _write_unit(
+    store: IndexStore,
+    docs: DataFrame,
+    postings: DataFrame,
+    positions: DataFrame | None,
+    gen: int | None = None,
+) -> None:
+    """Write one unit's layers: docs, compressed segments and, when given,
+    compressed positions (the persisted DOCS_AND_FREQS_AND_POSITIONS layer,
+    Lucene41 .pos).  ``positions`` may be the builder's pre-aggregated
+    frame, which keeps the codec shuffle at ~df rows.
+
+    The layer writes are independent jobs, so they are submitted
+    concurrently: each job's driver-side tail (commit, file promotion)
+    overlaps the others' executor compute instead of leaving the cluster
+    idle."""
+    writes = [
+        (docs, store.docs_path),
+        (compress_postings(postings), store.segments_path),
+    ]
+    if positions is not None:
+        writes.append((compress_positions(positions), store.positions_path))
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        futs = [pool.submit(_write_layer, df, path, gen) for df, path in writes]
+        for f in futs:
+            f.result()
 
 
 def build_pages_to_store(
@@ -169,7 +270,9 @@ def build_pages_to_store(
     compressed-segment partition directories, appends lineage rows, and
     commits a snapshot.  A crash between snapshots loses only the in-flight
     batch; re-running skips everything already committed.
-    ``fail_after_batches`` injects a crash for recovery tests.
+    ``fail_after_batches`` injects a crash for recovery tests.  A resume
+    must keep the committed partitions' ``build_positions``: it raises
+    ValueError before writing anything otherwise.
     """
     from lucene_solr_spark.pages import assign_page_docids, extract_text_expr
 
@@ -178,6 +281,12 @@ def build_pages_to_store(
     todo = [p for p in range(num_index_partitions) if p not in committed]
     if not todo:
         return store.head()
+    if committed and build_positions != _has_positions(store, None):
+        raise ValueError(
+            f"resume with build_positions={build_positions} over partitions "
+            f"committed with build_positions={not build_positions} at {root}: "
+            "phrase queries would miss the documents of one side"
+        )
 
     batch_size = batch_size or num_index_partitions
     # no persist here: each batch reads `assigned` exactly once (build_index
@@ -209,27 +318,8 @@ def build_pages_to_store(
             persist=True,
             build_positions=build_positions,
         )
-        # The three layer writes are independent jobs over already-materialized
-        # caches (build_index's stats agg forced docs + the grouped frame), so
-        # submit them concurrently: each job's driver-side tail (commit,
-        # file promotion) overlaps the others' executor compute instead of
-        # leaving the cluster idle — on a real cluster these are three
-        # non-overlapping output tables of the same snapshot.
-        writes = [(idx.docs, store.docs_path),
-                  (build_compressed_segments(idx, persist=False),
-                   store.segments_path)]
-        if build_positions and idx.positions is not None:
-            # persisted DOCS_AND_FREQS_AND_POSITIONS layer (Lucene41 .pos);
-            # the pre-aggregated frame keeps the codec shuffle at ~df rows
-            writes.append(
-                (compress_positions(idx.positions_grouped or idx.positions),
-                 store.positions_path)
-            )
-        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-            futs = [pool.submit(_write_partitioned, df, path)
-                    for df, path in writes]
-            for f in futs:
-                f.result()
+        _write_unit(store, idx.docs, idx.postings,
+                    idx.positions_grouped or idx.positions)
         wall = time.perf_counter() - t0
 
         sid = (snap.snapshot_id + 1) if snap else 1
@@ -248,11 +338,7 @@ def build_pages_to_store(
             )
             for p in batch
         ]
-        spark.createDataFrame(
-            lineage_rows,
-            "index_partition int, status string, n_docs long, sum_tf long, "
-            "wall_s double, snapshot_id int",
-        ).write.mode("append").parquet(store.lineage_path)
+        _append_lineage(spark, store, lineage_rows)
 
         # metrics table: one row per snapshot commit (build-level rollup of
         # the lineage rows — n_docs/sum_tf are deterministic, wall/throughput
@@ -274,9 +360,8 @@ def build_pages_to_store(
             "wall_s double, docs_per_sec double",
         ).write.mode("append").parquet(store.metrics_path)
 
-        snap = Snapshot(
-            snapshot_id=sid,
-            parent_id=snap.snapshot_id if snap else None,
+        snap = _successor(
+            snap,
             committed_partitions=sorted(
                 (set(snap.committed_partitions) if snap else set()) | set(batch)
             ),
@@ -436,17 +521,13 @@ def positions_from_compressed(compressed: DataFrame) -> DataFrame:
 
 def deleted_docids(spark: SparkSession, store: IndexStore, snap: Snapshot):
     """Union of all committed delete generations as (docid) — the liveDocs
-    complement — or None when the store has no deletes."""
+    complement — or None when the store has no deletes.  Only ever the right
+    side of an anti-join, so duplicate docids across generations are left
+    in."""
     if not snap.delete_gens:
         return None
     keep = F.col("dgen").isin(snap.delete_gens)
-    return (
-        spark.read.option("basePath", store.deletes_path)
-        .parquet(store.deletes_path)
-        .filter(keep)
-        .select("docid")
-        .distinct()
-    )
+    return _read_layer(spark, store.deletes_path, keep).select("docid")
 
 
 def delete_docids(spark: SparkSession, root: str, docids: DataFrame) -> Snapshot:
@@ -456,46 +537,23 @@ def delete_docids(spark: SparkSession, root: str, docids: DataFrame) -> Snapshot
     collection stats are untouched until compaction, matching Lucene's
     liveDocs semantics."""
     store = IndexStore(root)
-    snap = store.head()
-    if snap is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
+    snap = _head(store)
     dgen = max(snap.delete_gens or [0]) + 1
     docids.select(F.col("docid").cast("long").alias("docid")).distinct().write.mode(
         "overwrite"
     ).parquet(os.path.join(store.deletes_path, f"dgen={dgen}"))
-    new_snap = Snapshot(
-        **{
-            **snap.__dict__,
-            "snapshot_id": snap.snapshot_id + 1,
-            "parent_id": snap.snapshot_id,
-            "delete_gens": sorted(set(snap.delete_gens or []) | {dgen}),
-        }
+    new_snap = _successor(
+        snap, delete_gens=sorted(set(snap.delete_gens or []) | {dgen})
     )
     store.commit(new_snap)
     return new_snap
 
 
-def open_index(
-    spark: SparkSession, root: str, apply_deletes: bool = True
-) -> IndexTables:
-    """Open any store (batch partition-committed or streaming generational)
-    at its current snapshot — dispatches on whether the snapshot tracks
-    generations."""
-    snap = IndexStore(root).head()
-    if snap is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
-    if snap.gens:
-        from lucene_solr_spark.streaming.incremental import load_streaming_index
-
-        return load_streaming_index(spark, root, apply_deletes=apply_deletes)
-    return load_index(spark, root, apply_deletes=apply_deletes)
-
-
 def delete_by_term(spark: SparkSession, root: str, term: str) -> Snapshot:
     """Solr deleteByQuery for a term: resolve matching docids against the
     committed postings, record them as a delete generation."""
-    idx = open_index(spark, root, apply_deletes=False)
-    matching = idx.postings.filter(F.col("term") == term).select("docid").distinct()
+    idx = load_index(spark, root, apply_deletes=False)
+    matching = idx.postings.filter(F.col("term") == term).select("docid")
     return delete_docids(spark, root, matching)
 
 
@@ -508,7 +566,7 @@ def realtime_get(
     snapshot, a reader that re-resolves HEAD sees a just-indexed doc
     immediately, and an updated doc resolves to its newest generation (the
     older version is in a delete bitmap)."""
-    idx = open_index(spark, root)
+    idx = load_index(spark, root)
     return idx.docs.filter(F.col(key_col).isin(list(keys)))
 
 
@@ -516,7 +574,7 @@ def delete_by_key(
     spark: SparkSession, root: str, keys: list, key_col: str = "url"
 ) -> Snapshot:
     """Delete-by-id (unique key), IndexWriter.deleteDocuments(Term(id))."""
-    idx = open_index(spark, root, apply_deletes=False)
+    idx = load_index(spark, root, apply_deletes=False)
     matching = idx.docs.filter(F.col(key_col).isin(list(keys))).select("docid")
     return delete_docids(spark, root, matching)
 
@@ -565,24 +623,12 @@ def build_multifield_store(
         )
         for fname, idx in mfi.fields.items():
             try:
-                froot = os.path.join(root, "fields", fname)
-                store = IndexStore(froot)
-                _write_partitioned(idx.docs, store.docs_path)
-                _write_partitioned(
-                    build_compressed_segments(idx, persist=False),
-                    store.segments_path,
-                )
-                if idx.positions is not None:
-                    _write_partitioned(
-                        compress_positions(
-                            idx.positions_grouped or idx.positions
-                        ),
-                        store.positions_path,
-                    )
+                store = IndexStore(os.path.join(root, "fields", fname))
+                _write_unit(store, idx.docs, idx.postings,
+                            idx.positions_grouped or idx.positions)
                 store.commit(
-                    Snapshot(
-                        snapshot_id=1,
-                        parent_id=None,
+                    _successor(
+                        None,
                         committed_partitions=list(range(num_index_partitions)),
                         num_index_partitions=num_index_partitions,
                         max_doc=idx.max_doc,
@@ -620,7 +666,12 @@ def load_multifield_index(spark: SparkSession, root: str, apply_deletes: bool = 
 def load_index(
     spark: SparkSession, root: str, apply_deletes: bool = True
 ) -> IndexTables:
-    """Open the store at its current snapshot as queryable IndexTables.
+    """Open any store (batch, multi-field field, streaming or compacted) at
+    its current snapshot as queryable IndexTables.
+
+    Only the snapshot's committed units are read (see ``_committed``):
+    uncommitted or orphaned directories on disk are ignored.  A streaming
+    store's ``docs`` and compressed segments keep their ``gen`` column.
 
     Collection stats come from the snapshot manifest (exact, build-order
     independent); postings and positions are lazy decoded views over the
@@ -636,21 +687,19 @@ def load_index(
     live postings on first use (the zero-copy compressed view would leak
     deleted docs); compaction restores the zero-copy path."""
     store = IndexStore(root)
-    snap = store.head()
-    if snap is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
-    keep = F.col("index_partition").isin(snap.committed_partitions)
-    docs = spark.read.parquet(store.docs_path).filter(keep)
-    compressed = spark.read.parquet(store.segments_path).filter(keep)
+    snap = _head(store)
+    keep = _committed(snap)
+    docs = _read_layer(spark, store.docs_path, keep)
+    compressed = _read_layer(spark, store.segments_path, keep)
     postings = postings_from_compressed(compressed)
     segments = compressed.groupBy("term").agg(
         F.sum("df_part").cast("int").alias("df"),
         F.sum("cf_part").cast("long").alias("cf"),
     )
     positions = None
-    if os.path.isdir(store.positions_path):
+    if _has_positions(store, snap.gens):
         positions = positions_from_compressed(
-            spark.read.parquet(store.positions_path).filter(keep)
+            _read_layer(spark, store.positions_path, keep)
         )
     deleted = deleted_docids(spark, store, snap) if apply_deletes else None
     if deleted is not None:
@@ -672,6 +721,77 @@ def load_index(
     return index
 
 
+def _merge_generations(
+    spark: SparkSession,
+    store: IndexStore,
+    snap: Snapshot,
+    merge_gens: list[int],
+    drop_deletes: bool,
+) -> Snapshot:
+    """The one generation merge (SegmentMerger): decode ``merge_gens``,
+    re-encode them into ONE new generation, commit a snapshot that lists it
+    in their place, then remove their directories.
+
+    ``drop_deletes`` (forceMerge) drops the delete generations' docs
+    physically, commits live-doc stats and clears the delete list.  Without
+    it the merge is pure concatenation: stats are unchanged and the delete
+    generations keep masking every generation.
+
+    Crash-safe because readers open only committed generations: a crash
+    before the commit leaves the new generation unread, a crash after it
+    leaves the merged ones on disk, unread and never swept (a sweep could
+    not tell them from an in-flight batch's uncommitted generation)."""
+    keep = F.col("gen").isin(merge_gens)
+    docs = _read_layer(spark, store.docs_path, keep).drop("gen")
+    postings = postings_from_compressed(
+        _read_layer(spark, store.segments_path, keep)
+    )
+    positions = None
+    if _has_positions(store, merge_gens):
+        positions = positions_from_compressed(
+            _read_layer(spark, store.positions_path, keep)
+        )
+    changes = {}
+    if drop_deletes:
+        changes["delete_gens"] = []
+        deleted = deleted_docids(spark, store, snap)
+        if deleted is not None:
+            docs = docs.join(deleted, "docid", "left_anti")
+            postings = postings.join(deleted, "docid", "left_anti")
+            if positions is not None:
+                positions = positions.join(deleted, "docid", "left_anti")
+            agg = docs.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.sum("num_terms"), F.lit(0)).alias("s"),
+            ).collect()[0]
+            changes["max_doc"] = int(agg["n"])
+            changes["sum_total_term_freq"] = int(agg["s"])
+
+    # Merged generations live in a NEGATIVE id namespace so they can never
+    # collide with (or be mistaken for) a Structured-Streaming batch id: after
+    # batches 0..N-1, max+1 would be exactly the next batch id N.
+    new_gen = min(0, *snap.gens) - 1
+    _write_unit(store, docs, postings, positions, new_gen)
+    new_snap = _successor(
+        snap,
+        gens=sorted([g for g in snap.gens if g not in merge_gens] + [new_gen]),
+        max_batch_id=snap.max_batch_id
+        if snap.max_batch_id is not None
+        else max((g for g in snap.gens if g >= 0), default=None),
+        **changes,
+    )
+    store.commit(new_snap)
+    for g in merge_gens:
+        for layer in (store.docs_path, store.segments_path, store.positions_path):
+            shutil.rmtree(_unit_dir(layer, g), ignore_errors=True)
+    if drop_deletes:
+        for dg in snap.delete_gens or []:
+            shutil.rmtree(
+                os.path.join(store.deletes_path, f"dgen={dg}"), ignore_errors=True
+            )
+    return new_snap
+
+
 def delete_by_query(
     spark: SparkSession, root: str, q: str, now_epoch_ms: int | None = None
 ) -> Snapshot:
@@ -683,10 +803,10 @@ def delete_by_query(
     (everything EXCEPT the matches), like a filter would select it."""
     from lucene_solr_spark.search.filtercache import _parse_filter
 
-    idx = open_index(spark, root, apply_deletes=False)
+    idx = load_index(spark, root, apply_deletes=False)
     kind, df = _parse_filter(idx, q, now_epoch_ms=now_epoch_ms)
     if kind == "neg":
         matching = idx.docs.select("docid").join(df, "docid", "left_anti")
     else:
         matching = df.select("docid")
-    return delete_docids(spark, root, matching.distinct())
+    return delete_docids(spark, root, matching)

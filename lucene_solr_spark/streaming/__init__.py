@@ -2,7 +2,6 @@ from lucene_solr_spark.streaming.incremental import (
     StreamingIndexer,
     allowed_segment_count,
     compact_store,
-    load_streaming_index,
     maintain_store,
     update_documents,
 )
@@ -11,7 +10,6 @@ __all__ = [
     "StreamingIndexer",
     "allowed_segment_count",
     "compact_store",
-    "load_streaming_index",
     "maintain_store",
     "update_documents",
 ]

@@ -26,20 +26,24 @@ store's offline maintenance job.
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.index.builder import (
-    DOCID_PARTITION_SHIFT,
-    IndexTables,
-    build_index,
-)
-from lucene_solr_spark.index.compress import build_compressed_segments
+from lucene_solr_spark.index.builder import DOCID_PARTITION_SHIFT, build_index
 from lucene_solr_spark.pages import extract_text_expr, portable_url_hash
-from lucene_solr_spark.store.store import IndexStore, Snapshot
+from lucene_solr_spark.store.store import (
+    IndexStore,
+    Snapshot,
+    _append_lineage,
+    _head,
+    _merge_generations,
+    _successor,
+    _write_unit,
+    delete_docids,
+    load_index,
+)
 
 PAGES_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -134,21 +138,9 @@ class StreamingIndexer:
             return snap
 
         gen = int(batch_id)
-        docs_dir = os.path.join(self.store.docs_path, f"gen={gen}")
-        seg_dir = os.path.join(self.store.segments_path, f"gen={gen}")
         t0 = time.perf_counter()
-        idx.docs.write.mode("overwrite").partitionBy("index_partition").parquet(docs_dir)
-        build_compressed_segments(idx, persist=False).write.mode(
-            "overwrite"
-        ).partitionBy("index_partition").parquet(seg_dir)
-        if idx.positions is not None:
-            from lucene_solr_spark.index.compress import compress_positions
-
-            compress_positions(
-                idx.positions_grouped or idx.positions
-            ).write.mode("overwrite").partitionBy("index_partition").parquet(
-                os.path.join(self.store.positions_path, f"gen={gen}")
-            )
+        _write_unit(self.store, idx.docs, idx.postings,
+                    idx.positions_grouped or idx.positions, gen)
         wall = time.perf_counter() - t0
 
         # per-partition stats come from build_index's own stats job
@@ -160,15 +152,10 @@ class StreamingIndexer:
             (p, "committed", n, s, wall / max(len(per_part), 1), gen)
             for p, (n, s) in sorted(per_part.items())
         ]
-        spark.createDataFrame(
-            lineage_rows,
-            "index_partition int, status string, n_docs long, sum_tf long, "
-            "wall_s double, snapshot_id int",
-        ).write.mode("append").parquet(self.store.lineage_path)
+        _append_lineage(spark, self.store, lineage_rows)
 
-        new_snap = Snapshot(
-            snapshot_id=(snap.snapshot_id + 1) if snap else 1,
-            parent_id=snap.snapshot_id if snap else None,
+        new_snap = _successor(
+            snap,
             committed_partitions=sorted(
                 set(snap.committed_partitions if snap else []) | set(per_part)
             ),
@@ -182,7 +169,6 @@ class StreamingIndexer:
                 int(batch_id),
                 snap.max_batch_id if snap and snap.max_batch_id is not None else -1,
             ),
-            delete_gens=snap.delete_gens if snap else None,
         )
         self.store.commit(new_snap)  # soft-commit: new gen visible to readers
         return new_snap
@@ -254,181 +240,33 @@ def compact_store(
 
     Crash-safe either way: readers resolve generations through the snapshot,
     so a crash before the commit leaves the old snapshot intact and the
-    half-written new gen invisible; a crash after the commit leaves orphan
-    old dirs that the next compaction sweep removes.
+    half-written new gen invisible; a crash after the commit leaves the old
+    generation dirs on disk, and readers ignore them.  They are not swept
+    later: a sweep could not tell them from an in-flight batch's
+    uncommitted generation.
     """
-    if max_merge_at_once is not None:
-        return _compact_tiered(spark, root, max_merge_at_once)
-    import shutil
-
-    from lucene_solr_spark.index.compress import compress_positions, compress_postings
-    from lucene_solr_spark.store.store import (
-        deleted_docids,
-        positions_from_compressed,
-        postings_from_compressed,
-    )
-
     store = IndexStore(root)
-    snap = store.head()
-    if snap is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
-    old_gens = list(snap.gens or [])
-    old_dgens = list(snap.delete_gens or [])
-    if len(old_gens) <= 1 and not old_dgens:
-        return snap
-
-    keep = F.col("gen").isin(old_gens)
-    docs = spark.read.option("basePath", store.docs_path).parquet(
-        store.docs_path
-    ).filter(keep).drop("gen")
-    compressed = spark.read.option("basePath", store.segments_path).parquet(
-        store.segments_path
-    ).filter(keep)
-    postings = postings_from_compressed(compressed)
-
-    # merge drops deleted docs physically (SegmentMerger over liveDocs) and
-    # the compacted snapshot's stats reflect only live documents
-    deleted = deleted_docids(spark, store, snap)
-    new_max_doc, new_sum_ttf = snap.max_doc, snap.sum_total_term_freq
-    if deleted is not None:
-        docs = docs.join(deleted, "docid", "left_anti")
-        postings = postings.join(deleted, "docid", "left_anti")
-        agg = docs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("num_terms"), F.lit(0)).alias("s"),
-        ).collect()[0]
-        new_max_doc, new_sum_ttf = int(agg["n"]), int(agg["s"])
-
-    # Compacted generations live in a NEGATIVE id namespace so they can never
-    # collide with (or be mistaken for) a Structured-Streaming batch id: after
-    # batches 0..N-1, max+1 would be exactly the next batch id N.
-    new_gen = min(0, min(old_gens)) - 1
-    docs.write.mode("overwrite").partitionBy("index_partition").parquet(
-        os.path.join(store.docs_path, f"gen={new_gen}")
-    )
-    compress_postings(postings).write.mode("overwrite").partitionBy(
-        "index_partition"
-    ).parquet(os.path.join(store.segments_path, f"gen={new_gen}"))
-    # carry the positions layer through the merge when every source gen has it
-    if all(
-        os.path.isdir(os.path.join(store.positions_path, f"gen={g}"))
-        for g in old_gens
-    ):
-        pos = positions_from_compressed(
-            spark.read.option("basePath", store.positions_path)
-            .parquet(store.positions_path)
-            .filter(keep)
-        )
-        if deleted is not None:
-            pos = pos.join(deleted, "docid", "left_anti")
-        compress_positions(pos).write.mode("overwrite").partitionBy(
-            "index_partition"
-        ).parquet(os.path.join(store.positions_path, f"gen={new_gen}"))
-
-    new_snap = Snapshot(
-        snapshot_id=snap.snapshot_id + 1,
-        parent_id=snap.snapshot_id,
-        committed_partitions=snap.committed_partitions,
-        num_index_partitions=snap.num_index_partitions,
-        max_doc=new_max_doc,
-        sum_total_term_freq=new_sum_ttf,
-        gens=[new_gen],
-        doc_bases=snap.doc_bases,
-        max_batch_id=snap.max_batch_id
-        if snap.max_batch_id is not None
-        else max((g for g in old_gens if g >= 0), default=None),
-        delete_gens=[],  # physically dropped above
-    )
-    store.commit(new_snap)
-    for g in old_gens:
-        shutil.rmtree(os.path.join(store.docs_path, f"gen={g}"), ignore_errors=True)
-        shutil.rmtree(os.path.join(store.segments_path, f"gen={g}"), ignore_errors=True)
-        shutil.rmtree(os.path.join(store.positions_path, f"gen={g}"), ignore_errors=True)
-    for dg in old_dgens:
-        shutil.rmtree(
-            os.path.join(store.deletes_path, f"dgen={dg}"), ignore_errors=True
-        )
-    return new_snap
-
-
-def _compact_tiered(spark: SparkSession, root: str, max_merge_at_once: int) -> Snapshot:
-    """Tiered partial merge: concatenate the smallest generations only."""
-    import shutil
-
-    from lucene_solr_spark.index.compress import compress_positions, compress_postings
-    from lucene_solr_spark.store.store import (
-        positions_from_compressed,
-        postings_from_compressed,
-    )
-
-    store = IndexStore(root)
-    snap = store.head()
-    if snap is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
+    snap = _head(store)
     gens = list(snap.gens or [])
+    if max_merge_at_once is None:
+        if len(gens) <= 1 and not snap.delete_gens:
+            return snap
+        return _merge_generations(spark, store, snap, gens, drop_deletes=True)
     if len(gens) <= 1 or max_merge_at_once < 2:
         return snap
+    sizes = _generation_sizes(spark, root)
+    merge = sorted(gens, key=lambda g: (sizes.get(g, 0), g))[:max_merge_at_once]
+    return _merge_generations(spark, store, snap, merge, drop_deletes=False)
 
-    sizes = {
+
+def _generation_sizes(spark: SparkSession, root: str) -> dict[int, int]:
+    """Doc count per committed generation, deletes included (the merge
+    policies' segment-size proxy)."""
+    docs = load_index(spark, root, apply_deletes=False).docs
+    return {
         int(r["gen"]): int(r["n"])
-        for r in spark.read.option("basePath", store.docs_path)
-        .parquet(store.docs_path)
-        .filter(F.col("gen").isin(gens))
-        .groupBy("gen")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
+        for r in docs.groupBy("gen").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    merge_gens = sorted(gens, key=lambda g: (sizes.get(g, 0), g))[:max_merge_at_once]
-    keep_gens = [g for g in gens if g not in merge_gens]
-
-    keep = F.col("gen").isin(merge_gens)
-    docs = spark.read.option("basePath", store.docs_path).parquet(
-        store.docs_path
-    ).filter(keep).drop("gen")
-    compressed = spark.read.option("basePath", store.segments_path).parquet(
-        store.segments_path
-    ).filter(keep)
-    postings = postings_from_compressed(compressed)
-
-    all_gens = keep_gens + merge_gens
-    new_gen = min(0, min(all_gens)) - 1
-    docs.write.mode("overwrite").partitionBy("index_partition").parquet(
-        os.path.join(store.docs_path, f"gen={new_gen}")
-    )
-    compress_postings(postings).write.mode("overwrite").partitionBy(
-        "index_partition"
-    ).parquet(os.path.join(store.segments_path, f"gen={new_gen}"))
-    if all(
-        os.path.isdir(os.path.join(store.positions_path, f"gen={g}"))
-        for g in merge_gens
-    ):
-        pos = positions_from_compressed(
-            spark.read.option("basePath", store.positions_path)
-            .parquet(store.positions_path)
-            .filter(keep)
-        )
-        compress_positions(pos).write.mode("overwrite").partitionBy(
-            "index_partition"
-        ).parquet(os.path.join(store.positions_path, f"gen={new_gen}"))
-
-    new_snap = Snapshot(
-        **{
-            **snap.__dict__,
-            "snapshot_id": snap.snapshot_id + 1,
-            "parent_id": snap.snapshot_id,
-            "gens": sorted(keep_gens + [new_gen]),
-        }
-    )
-    store.commit(new_snap)
-    for g in merge_gens:
-        shutil.rmtree(os.path.join(store.docs_path, f"gen={g}"), ignore_errors=True)
-        shutil.rmtree(
-            os.path.join(store.segments_path, f"gen={g}"), ignore_errors=True
-        )
-        shutil.rmtree(
-            os.path.join(store.positions_path, f"gen={g}"), ignore_errors=True
-        )
-    return new_snap
 
 
 def allowed_segment_count(
@@ -476,30 +314,15 @@ def maintain_store(
     TieredMergePolicy.java:336-398 score()); each pass is the crash-safe
     tiered merge in compact_store."""
     if max_merge_at_once < 2:
-        # _compact_tiered is a no-op below 2 — the loop would spin forever
+        # a tiered compaction is a no-op below 2 — the loop would spin forever
         raise ValueError(f"max_merge_at_once must be >= 2, got {max_merge_at_once}")
-    store = IndexStore(root)
-    snap = store.head()
-    if snap is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
-    while True:
-        gens = list(snap.gens or [])
-        if len(gens) <= 1:
-            return snap
-        sizes = [
-            int(r["n"])
-            for r in spark.read.option("basePath", store.docs_path)
-            .parquet(store.docs_path)
-            .filter(F.col("gen").isin(gens))
-            .groupBy("gen")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        ]
-        if len(gens) <= allowed_segment_count(
-            sizes, segs_per_tier, max_merge_at_once, floor_docs
-        ):
-            return snap
-        snap = _compact_tiered(spark, root, max_merge_at_once)
+    snap = _head(IndexStore(root))
+    while len(snap.gens or []) > 1 and len(snap.gens) > allowed_segment_count(
+        list(_generation_sizes(spark, root).values()),
+        segs_per_tier, max_merge_at_once, floor_docs,
+    ):
+        snap = compact_store(spark, root, max_merge_at_once)
+    return snap
 
 
 def update_documents(
@@ -513,22 +336,15 @@ def update_documents(
     quiesced: the new generation consumes the next batch id, so a stream
     resumed from an older checkpoint would see that id as already committed.
     """
-    from lucene_solr_spark.store.store import delete_docids, open_index
-
-    store = IndexStore(root)
-    snap = store.head()
-    if snap is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
     # The incoming keys stay distributed: committed docs carrying any
     # incoming url are found with a semi-join and written straight into the
     # delete generation (a collected key list would OOM the driver on a
     # backfill-sized update batch).
-    idx = open_index(spark, root, apply_deletes=False)
+    idx = load_index(spark, root, apply_deletes=False)
     matching = idx.docs.join(
         pages_df.select("url").distinct(), "url", "left_semi"
     ).select("docid")
-    delete_docids(spark, root, matching)
-    snap = store.head()
+    snap = delete_docids(spark, root, matching)
     next_bid = (
         snap.max_batch_id
         if snap.max_batch_id is not None
@@ -536,65 +352,3 @@ def update_documents(
     ) + 1
     indexer = StreamingIndexer(spark, root, snap.num_index_partitions)
     return indexer.process_batch(pages_df, next_bid)
-
-
-def load_streaming_index(
-    spark: SparkSession, root: str, apply_deletes: bool = True
-) -> IndexTables:
-    """Open a streaming store (all committed generations) as IndexTables.
-    Committed delete generations apply as an anti-join (liveDocs); stats stay
-    pre-delete until compaction, like load_index."""
-    from lucene_solr_spark.store.store import (
-        deleted_docids,
-        positions_from_compressed,
-        postings_from_compressed,
-    )
-
-    store = IndexStore(root)
-    snap = store.head()
-    if snap is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
-    keep = F.col("gen").isin(snap.gens or [])
-    docs = spark.read.option("basePath", store.docs_path).parquet(
-        store.docs_path
-    ).filter(keep)
-    compressed = spark.read.option("basePath", store.segments_path).parquet(
-        store.segments_path
-    ).filter(keep)
-    postings = postings_from_compressed(compressed)
-    segments = compressed.groupBy("term").agg(
-        F.sum("df_part").cast("int").alias("df"),
-        F.sum("cf_part").cast("long").alias("cf"),
-    )
-    # positions view only when EVERY committed generation persisted one
-    # (a gen written with build_positions=False leaves phrase queries to an
-    # in-memory rebuild rather than silently missing its occurrences)
-    gens = list(snap.gens or [])
-    positions = None
-    if gens and all(
-        os.path.isdir(os.path.join(store.positions_path, f"gen={g}"))
-        for g in gens
-    ):
-        positions = positions_from_compressed(
-            spark.read.option("basePath", store.positions_path)
-            .parquet(store.positions_path)
-            .filter(keep)
-        )
-    deleted = deleted_docids(spark, store, snap) if apply_deletes else None
-    if deleted is not None:
-        docs = docs.join(deleted, "docid", "left_anti")
-        postings = postings.join(deleted, "docid", "left_anti")
-        if positions is not None:
-            positions = positions.join(deleted, "docid", "left_anti")
-    index = IndexTables(
-        docs=docs,
-        postings=postings,
-        segments=segments,
-        max_doc=snap.max_doc,
-        sum_total_term_freq=snap.sum_total_term_freq,
-        avgdl=snap.avgdl,
-        positions=positions,
-    )
-    if deleted is None:
-        object.__setattr__(index, "_compressed", compressed)
-    return index

@@ -101,9 +101,9 @@ def test_version_zero_or_absent_no_check(spark, existing):
 def test_atomic_update_through_store(spark, tmp_path):
     """End-to-end: atomic lang set merges against a live store's docs and
     re-indexes through update_documents (delete+add)."""
+    from lucene_solr_spark.store import load_index
     from lucene_solr_spark.streaming.incremental import (
         StreamingIndexer,
-        load_streaming_index,
         update_documents,
     )
 
@@ -116,7 +116,7 @@ def test_atomic_update_through_store(spark, tmp_path):
         "url string, html string, lang string",
     )
     StreamingIndexer(spark, root, 2).process_batch(pages, 0)
-    idx = load_streaming_index(spark, root)
+    idx = load_index(spark, root)
     stored = idx.docs.select("url", "lang")
     upd = spark.createDataFrame([("u1", "de")], "url string, lang string")
     merged = atomic_merge(stored, upd, {"lang": "set"}, key_col="url")
@@ -125,6 +125,6 @@ def test_atomic_update_through_store(spark, tmp_path):
         [("u1", "<p>alpha beta</p>")], "url string, html string"
     )
     update_documents(spark, root, merged.join(html, "url"))
-    after = load_streaming_index(spark, root)
+    after = load_index(spark, root)
     rows = {r.url: r.lang for r in after.docs.select("url", "lang").collect()}
     assert rows == {"u1": "de", "u2": "en"}

@@ -4,9 +4,12 @@ selection equals a direct set computation over the postings (a pure-SHOULD
 query needs at least one match), and every entry point runs one docid pivot
 aggregate over a term-pruned postings read with no Python in the plan."""
 
+import re
+
 import pytest
 
 from lucene_solr_spark.index.builder import build_index
+from lucene_solr_spark.index.fields import MultiFieldIndex, search_fields
 from lucene_solr_spark.search import search
 from lucene_solr_spark.search.classic import classic_topk
 from lucene_solr_spark.search.dfr import dfr_topk, ib_topk
@@ -108,3 +111,33 @@ def test_one_pivot_over_term_pruned_postings(index, entry):
     assert len(pivots) == 1, text
     below = "\n".join(subtree(nodes, pivots[0]))
     assert " IN (" in below and "term" in below, below
+
+
+@pytest.mark.parametrize("entry", sorted(ENTRY_POINTS) + ["fields"])
+def test_must_not_anti_join_needs_no_distinct(index, entry):
+    """The MUST_NOT docid frame is broadcast straight from the pruned
+    postings: a left-anti join needs no distinct keys, so no docid
+    aggregate (and its shuffle) feeds it."""
+    q = SHAPES["must_not"]
+    if entry == "fields":
+        out = search_fields(MultiFieldIndex({"text": index}, "text"), q, k=ALL)
+    else:
+        out = ENTRY_POINTS[entry](index, q)
+    out.collect()
+    nodes = plan_nodes(out)
+    text = "\n".join(nodes)
+    anti = [
+        i for i, n in enumerate(nodes)
+        if n.lstrip().startswith("BroadcastHashJoin") and "LeftAnti" in n
+    ]
+    assert len(anti) == 1, text
+    join = subtree(nodes, anti[0])
+    # the build side: the broadcast closest to the join
+    build = min(
+        (i for i, n in enumerate(join) if n.lstrip().startswith("BroadcastExchange")),
+        key=lambda i: len(join[i]) - len(join[i].lstrip()),
+    )
+    build_side = "\n".join(subtree(join, build))
+    assert "vector" in build_side, build_side  # the MUST_NOT term's postings
+    distinct = re.compile(r"HashAggregate\(keys=\[docid#\d+L?\], functions=\[\]")
+    assert not distinct.search(build_side), build_side

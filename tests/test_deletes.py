@@ -82,9 +82,10 @@ def stream_store(spark, pages, tmp_path):
 
 
 def test_update_documents_replaces_content(spark, pages, stream_store):
-    from lucene_solr_spark.streaming import load_streaming_index, update_documents
+    from lucene_solr_spark.store import load_index
+    from lucene_solr_spark.streaming import update_documents
 
-    before = load_streaming_index(spark, stream_store)
+    before = load_index(spark, stream_store)
     victim = before.docs.select("url").orderBy("url").limit(1).collect()[0].url
     n_before = before.docs.count()
 
@@ -97,7 +98,7 @@ def test_update_documents_replaces_content(spark, pages, stream_store):
     )
     snap = update_documents(spark, stream_store, new_pages)
     assert snap.delete_gens == [1]
-    after = load_streaming_index(spark, stream_store)
+    after = load_index(spark, stream_store)
     # same live doc count: one deleted, one re-added
     assert after.docs.count() == n_before
     assert after.docs.filter(F.col("url") == victim).count() == 1
@@ -114,9 +115,10 @@ def test_update_documents_bulk_batch(spark, pages, stream_store):
     """Backfill-shaped update: half the corpus in ONE batch.  The delete
     keys never land on the driver (docids flow from a semi-join into the
     delete generation), so this works at any batch size."""
-    from lucene_solr_spark.streaming import load_streaming_index, update_documents
+    from lucene_solr_spark.store import load_index
+    from lucene_solr_spark.streaming import update_documents
 
-    before = load_streaming_index(spark, stream_store)
+    before = load_index(spark, stream_store)
     n_before = before.docs.count()
     doc_id = F.split(F.col("url"), "/doc/")[1].cast("long")
     batch = pages.where(doc_id % 2 == 0).withColumn(
@@ -133,7 +135,7 @@ def test_update_documents_bulk_batch(spark, pages, stream_store):
     n_batch = batch.count()
     assert n_batch > 1
     update_documents(spark, stream_store, batch)
-    after = load_streaming_index(spark, stream_store)
+    after = load_index(spark, stream_store)
     assert after.docs.count() == n_before  # replaced, not duplicated
     # every updated url carries the new content exactly once
     upd = (
@@ -149,10 +151,10 @@ def test_update_documents_bulk_batch(spark, pages, stream_store):
 def test_compaction_drops_deletes_physically(spark, stream_store):
     from lucene_solr_spark.search import BooleanQuery
     from lucene_solr_spark.search.wand import wand_search
-    from lucene_solr_spark.store import IndexStore, delete_by_term
-    from lucene_solr_spark.streaming import compact_store, load_streaming_index
+    from lucene_solr_spark.store import IndexStore, delete_by_term, load_index
+    from lucene_solr_spark.streaming import compact_store
 
-    before = load_streaming_index(spark, stream_store)
+    before = load_index(spark, stream_store)
     n_slow = (
         before.postings.filter(F.col("term") == "slow")
         .select("docid")
@@ -166,7 +168,7 @@ def test_compaction_drops_deletes_physically(spark, stream_store):
     snap = compact_store(spark, stream_store)
     assert snap.delete_gens == []
     assert snap.max_doc == before.max_doc - n_slow
-    after = load_streaming_index(spark, stream_store)
+    after = load_index(spark, stream_store)
     # physically gone; stats now reflect live docs only
     assert after.docs.count() == snap.max_doc
     assert after.postings.filter(F.col("term") == "slow").count() == 0

@@ -94,8 +94,7 @@ def store_root(spark, sf_dir, tmp_path_factory):
 
 
 def test_apply_update_end_to_end(spark, store_root):
-    from lucene_solr_spark.store.store import realtime_get
-    from lucene_solr_spark.streaming.incremental import load_streaming_index
+    from lucene_solr_spark.store.store import load_index, realtime_get
 
     url = "https://site1.example/doc/1"
     # the update request: delete doc 1 by id, add a replacement via the
@@ -113,7 +112,7 @@ def test_apply_update_end_to_end(spark, store_root):
     by_url = {r.url: r for r in got.collect()}
     assert "https://new.example/doc/x" in by_url
     assert url not in by_url  # deleted
-    idx = load_streaming_index(spark, store_root)
+    idx = load_index(spark, store_root)
     assert idx.docs.filter("url = 'https://new.example/doc/x'").count() == 1
 
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import re
 
 import numpy as np
@@ -156,6 +157,88 @@ def test_crash_resume_recovers_exactly(spark, pages, mem_index, tmp_path):
 
     q = BooleanQuery.of(must=["table"], should=["merge", "scan"])
     assert _topk(final, q) == _topk(mem_index, q)
+
+
+def _tree(root):
+    """Every file under root, relative to it."""
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, files in os.walk(root) for f in files
+    )
+
+
+@pytest.mark.parametrize("first", [True, False], ids=["pos_then_nopos", "nopos_then_pos"])
+def test_resume_with_other_build_positions_raises(spark, pages, tmp_path, first):
+    """A resume must keep the committed partitions' positions choice: a
+    mixed store would expose a positions view without the later partitions,
+    and phrase queries would silently miss their docs.  The mismatch raises
+    before anything is written; the original choice still resumes."""
+    from lucene_solr_spark.store import (
+        IndexStore,
+        SimulatedFailure,
+        build_pages_to_store,
+        load_index,
+    )
+
+    root = str(tmp_path / "idx")
+    args = dict(num_index_partitions=4, batch_size=2)
+    with pytest.raises(SimulatedFailure):
+        build_pages_to_store(
+            spark, pages, root, fail_after_batches=1, build_positions=first, **args
+        )
+    head, files = IndexStore(root).head(), _tree(root)
+    with pytest.raises(ValueError, match="build_positions"):
+        build_pages_to_store(spark, pages, root, build_positions=not first, **args)
+    assert IndexStore(root).head() == head
+    assert _tree(root) == files
+
+    snap = build_pages_to_store(spark, pages, root, build_positions=first, **args)
+    assert snap.committed_partitions == [0, 1, 2, 3]
+    assert (load_index(spark, root).positions is not None) == first
+
+
+def _opened(spark, root):
+    """Committed-content fingerprint of a reopened store."""
+    from lucene_solr_spark.store import load_index
+
+    idx = load_index(spark, root)
+    counts = (idx.docs.count(), idx.postings.count(), idx.positions.count())
+    return counts, _topk(idx, "table")
+
+
+def test_load_index_ignores_orphan_generations(spark, pages, tmp_path, monkeypatch):
+    """Generation dirs that no snapshot lists are never read: an uncommitted
+    gen= dir (a crash before its commit) and a compaction's merged-away gens
+    (a crash after the compaction commit, before their removal)."""
+    import shutil
+
+    from lucene_solr_spark.store import IndexStore
+    from lucene_solr_spark.streaming import StreamingIndexer, compact_store
+
+    root = str(tmp_path / "stream")
+    indexer = StreamingIndexer(spark, root, num_index_partitions=4)
+    doc_id = F.split(F.col("url"), "/doc/")[1].cast("long")
+    indexer.process_batch(pages.where(doc_id % 2 == 0), 0)
+    snap = indexer.process_batch(pages.where(doc_id % 2 == 1), 1)
+    want = _opened(spark, root)
+    assert want[0][0] == snap.max_doc and want[1]
+    compacted = str(tmp_path / "compacted")
+    shutil.copytree(root, compacted)
+
+    for layer in ("docs", "segments", "positions"):
+        shutil.copytree(
+            os.path.join(root, layer, "gen=1"), os.path.join(root, layer, "gen=7")
+        )
+    assert IndexStore(root).head() == snap
+    assert _opened(spark, root) == want
+
+    with monkeypatch.context() as m:
+        m.setattr(shutil, "rmtree", lambda *a, **k: None)
+        merged = compact_store(spark, compacted)
+    assert merged.gens == [-1]
+    for g in snap.gens:
+        assert os.path.isdir(os.path.join(compacted, "segments", f"gen={g}"))
+    assert _opened(spark, compacted) == want
 
 
 def test_rerun_on_complete_store_is_noop(spark, pages, tmp_path):
@@ -400,7 +483,7 @@ def reopened(spark, pages, tmp_path_factory):
     import shutil
 
     from lucene_solr_spark.store import build_pages_to_store, delete_by_term, load_index
-    from lucene_solr_spark.streaming import StreamingIndexer, load_streaming_index
+    from lucene_solr_spark.streaming import StreamingIndexer
 
     base = tmp_path_factory.mktemp("pruned")
     batch, deleted, stream = (str(base / n) for n in ("batch", "deleted", "stream"))
@@ -414,7 +497,7 @@ def reopened(spark, pages, tmp_path_factory):
     return {
         "batch": load_index(spark, batch),
         "deleted": load_index(spark, deleted),
-        "streaming": load_streaming_index(spark, stream),
+        "streaming": load_index(spark, stream),
     }
 
 

@@ -55,11 +55,11 @@ def test_stream_commits_one_generation_per_batch(spark, streamed):
 
 def test_streamed_index_equals_batch_build(spark, pages, streamed):
     from lucene_solr_spark.pages import build_index_from_pages
-    from lucene_solr_spark.streaming import load_streaming_index
+    from lucene_solr_spark.store import load_index
 
     _, root = streamed
     batch_idx = build_index_from_pages(spark, pages, num_index_partitions=8)
-    stream_idx = load_streaming_index(spark, root)
+    stream_idx = load_index(spark, root)
 
     assert stream_idx.max_doc == batch_idx.max_doc
     assert stream_idx.sum_total_term_freq == batch_idx.sum_total_term_freq
@@ -80,10 +80,10 @@ def test_wand_over_streamed_generations(spark, streamed):
     """The WAND kernel must handle multiple generations per partition
     (per-(partition, gen) groups with disjoint docid ranges)."""
     from lucene_solr_spark.search.wand import wand_search
-    from lucene_solr_spark.streaming import load_streaming_index
+    from lucene_solr_spark.store import load_index
 
     _, root = streamed
-    idx = load_streaming_index(spark, root)
+    idx = load_index(spark, root)
     got = wand_search(idx, "table", k=10).collect()
     assert len(got) == 10
     # same results as the Catalyst path over the same streamed index
@@ -107,10 +107,11 @@ def test_compaction_preserves_results(spark, streamed):
     """forceMerge analog: all generations -> one; queries unchanged."""
     from lucene_solr_spark.search import BooleanQuery, search
     from lucene_solr_spark.search.wand import wand_search
-    from lucene_solr_spark.streaming import compact_store, load_streaming_index
+    from lucene_solr_spark.store import load_index
+    from lucene_solr_spark.streaming import compact_store
 
     indexer, root = streamed
-    before_idx = load_streaming_index(spark, root)
+    before_idx = load_index(spark, root)
     q = BooleanQuery.of(must=["table"], should=["merge", "scan"])
     before = [(r.docid, r.score) for r in search(before_idx, q, k=10).collect()]
     seg_before = sorted(
@@ -119,7 +120,7 @@ def test_compaction_preserves_results(spark, streamed):
 
     snap = compact_store(spark, root)
     assert len(snap.gens) == 1
-    after_idx = load_streaming_index(spark, root)
+    after_idx = load_index(spark, root)
     assert after_idx.max_doc == before_idx.max_doc
     assert sorted(
         map(tuple, after_idx.segments.select("term", "df", "cf").collect())
@@ -134,14 +135,15 @@ def test_compaction_preserves_results(spark, streamed):
 
 def test_soft_commit_visibility_after_first_batch(spark, pages, tmp_path):
     """After one batch, readers see exactly that batch (NRT visibility)."""
-    from lucene_solr_spark.streaming import StreamingIndexer, load_streaming_index
+    from lucene_solr_spark.store import load_index
+    from lucene_solr_spark.streaming import StreamingIndexer
 
     root = str(tmp_path / "idx1")
     indexer = StreamingIndexer(spark, root, num_index_partitions=4)
     doc_id = F.split(F.col("url"), "/doc/")[1].cast("long")
     first = pages.where(doc_id < 100)
     indexer.process_batch(first, 0)
-    idx = load_streaming_index(spark, root)
+    idx = load_index(spark, root)
     assert idx.max_doc == first.count()
     assert idx.docs.count() == idx.max_doc
 
@@ -151,7 +153,8 @@ def test_batch_after_compaction_not_dropped(spark, pages, streamed):
     max(gens)+1 compacted-gen id would collide with it and silently drop the
     micro-batch.  Compacted gens are negative and replay detection uses the
     max_batch_id watermark, so batch N commits and old ids still skip."""
-    from lucene_solr_spark.streaming import compact_store, load_streaming_index
+    from lucene_solr_spark.store import load_index
+    from lucene_solr_spark.streaming import compact_store
 
     indexer, root = streamed
     compact_store(spark, root)  # no-op if the earlier test already compacted
@@ -174,14 +177,15 @@ def test_batch_after_compaction_not_dropped(spark, pages, streamed):
     assert s2.max_doc == before.max_doc + n_extra
     assert sorted(s2.gens) == [-1, 2]
     assert s2.max_batch_id == 2
-    idx = load_streaming_index(spark, root)
+    idx = load_index(spark, root)
     assert idx.max_doc == s2.max_doc
 
 
 def test_tiered_compaction_merges_smallest_only(spark, pages, streamed):
     """TieredMergePolicy mode: merge the N smallest generations, leave the
     rest; stats and delete semantics untouched (pure concatenation)."""
-    from lucene_solr_spark.streaming import compact_store, load_streaming_index
+    from lucene_solr_spark.store import load_index
+    from lucene_solr_spark.streaming import compact_store
     from lucene_solr_spark.streaming.incremental import StreamingIndexer
 
     indexer, root = streamed
@@ -192,13 +196,13 @@ def test_tiered_compaction_merges_smallest_only(spark, pages, streamed):
     s1 = indexer.process_batch(pages.where(doc_id < 3), nb + 1)
     s2 = indexer.process_batch(pages.where((doc_id >= 3) & (doc_id < 6)), nb + 2)
     assert len(s2.gens) >= 3
-    total_before = load_streaming_index(spark, root).docs.count()
+    total_before = load_index(spark, root).docs.count()
 
     snap = compact_store(spark, root, max_merge_at_once=2)
     # two smallest gens merged into one: net gen count shrinks by exactly 1
     assert len(snap.gens) == len(s2.gens) - 1
     assert snap.max_doc == s2.max_doc  # stats untouched by tiered merge
-    after = load_streaming_index(spark, root)
+    after = load_index(spark, root)
     assert after.docs.count() == total_before
 
 
@@ -208,10 +212,10 @@ def test_streamed_positions_phrase_equals_batch(spark, pages, tmp_path):
     after a full compaction (which re-encodes the positions layer)."""
     from lucene_solr_spark.pages import build_index_from_pages
     from lucene_solr_spark.search import PhraseQuery, search
+    from lucene_solr_spark.store import load_index
     from lucene_solr_spark.streaming import (
         StreamingIndexer,
         compact_store,
-        load_streaming_index,
     )
 
     root = str(tmp_path / "idx_pos")
@@ -231,14 +235,14 @@ def test_streamed_positions_phrase_equals_batch(spark, pages, tmp_path):
         )
 
     # docids differ between arrival-order and batch assignment; compare by url
-    loaded = load_streaming_index(spark, root)
+    loaded = load_index(spark, root)
     assert loaded.positions is not None
     want = by_url(mem)
     got = by_url(loaded)
     assert [u for u, _ in got] and got == want
 
     compact_store(spark, root)
-    compacted = load_streaming_index(spark, root)
+    compacted = load_index(spark, root)
     assert compacted.positions is not None
     assert by_url(compacted) == want
 
@@ -259,9 +263,9 @@ def test_maintain_store_merges_until_tiered(spark, pages, tmp_path):
     """findMerges driver: repeated smallest-N tiered merges until the
     generation profile fits the tier budget; results unchanged."""
     from lucene_solr_spark.search import BooleanQuery, search
+    from lucene_solr_spark.store import load_index
     from lucene_solr_spark.streaming import (
         StreamingIndexer,
-        load_streaming_index,
         maintain_store,
     )
 
@@ -272,14 +276,14 @@ def test_maintain_store_merges_until_tiered(spark, pages, tmp_path):
     doc_id = F.split(F.col("url"), "/doc/")[1].cast("long")
     for b in range(6):  # six small generations
         indexer.process_batch(pages.where(doc_id % 6 == b), b)
-    before_idx = load_streaming_index(spark, root)
+    before_idx = load_index(spark, root)
     q = BooleanQuery.of(must=["table"])
     before = [(r.docid, r.score) for r in search(before_idx, q, k=10).collect()]
 
     snap = maintain_store(spark, root, segs_per_tier=2, max_merge_at_once=3,
                           floor_docs=10)
     assert len(snap.gens) < 6
-    sizes_ok = load_streaming_index(spark, root)
+    sizes_ok = load_index(spark, root)
     assert sizes_ok.max_doc == before_idx.max_doc
     after = [(r.docid, r.score) for r in search(sizes_ok, q, k=10).collect()]
     assert after == before
@@ -290,7 +294,8 @@ def test_commit_within_processing_time_trigger(spark, pages, tmp_path):
     on a processing-time schedule and drains the same data."""
     import time
 
-    from lucene_solr_spark.streaming import StreamingIndexer, load_streaming_index
+    from lucene_solr_spark.store import load_index
+    from lucene_solr_spark.streaming import StreamingIndexer
 
     src = str(tmp_path / "in")
     subset = pages.orderBy("url").limit(30)
@@ -313,7 +318,7 @@ def test_commit_within_processing_time_trigger(spark, pages, tmp_path):
         q.stop()
         q.awaitTermination(60)
     assert head is not None, "stream never soft-committed a generation"
-    idx = load_streaming_index(spark, root)
+    idx = load_index(spark, root)
     assert idx.max_doc == n_docs
 
 
